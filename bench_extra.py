@@ -1,7 +1,7 @@
 """Round-6 optimization measurement harness (bench.py is FROZEN — this
 file carries the extra instrumentation the optimization round needs).
 
-Three subcommands:
+Two subcommands:
 
   queries [names...]   time declared queries with the frozen bench's own
                        methodology (.count(), min over k samples, steal%
@@ -10,15 +10,10 @@ Three subcommands:
                        cost); writes one JSON line per query.
   explain [names...]   dump .explain('formatted') for each query to
                        plans/r06/<name>_<tag>.txt  (tag from --tag).
-  phases               decompose the HEADLINE pipeline configuration
-                       (emit_text=True, the frozen bench's timed
-                       section) into parse/cache, conflict, fanout
-                       walls with GC + cpu_util per phase.
 
 Usage:
   python bench_extra.py queries dp_minhash_lsh dp_ngram_jaccard
   python bench_extra.py explain --tag before dp_minhash_lsh
-  python bench_extra.py phases [n_turns]
 """
 
 from __future__ import annotations
@@ -109,123 +104,9 @@ def cmd_explain(names: list[str], tag: str) -> None:
         print(f"wrote {path}", flush=True)
 
 
-def cmd_phases(n_turns: int) -> None:
-    """Headline-configuration (emit_text=True) phase decomposition at
-    local[CPUS] — scripts/phase_profile.py covers the notext criterion
-    config; the frozen bench's headline times THIS config."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.storagelevel import StorageLevel
-
-    from bench import ensure_transcripts, _cpu_sample
-
-    from sqlite_otel_spark.config import PipelineConfig
-    from sqlite_otel_spark.operators import aggregates as agg_ops
-    from sqlite_otel_spark.operators import facts as facts_ops
-    from sqlite_otel_spark.operators.conflicts import (
-        drop_conflicted,
-        resolve_span_conflicts,
-    )
-    from sqlite_otel_spark.operators.dims import (
-        build_metric_defs,
-        build_resources,
-        build_scopes,
-        enrich_record_ids,
-    )
-    from sqlite_otel_spark.operators.enrich import enrich, role_dim, tool_dim
-    from sqlite_otel_spark.operators.records import to_records
-    from sqlite_otel_spark.plans import pipeline as plan
-
-    rep = 2 * CPUS
-    path = ensure_transcripts(n_turns)
-    spark = _session(rep)
-    cfg = PipelineConfig()
-
-    # warmup: full benched section on 1/10 input
-    from bench import timed_pipeline
-
-    wpath = ensure_transcripts(max(20_000, n_turns // 10))
-    timed_pipeline(spark, wpath, rep)
-
-    def gc_s() -> float:
-        beans = (spark._jvm.java.lang.management.ManagementFactory
-                 .getGarbageCollectorMXBeans())
-        t, it = 0, beans.iterator()
-        while it.hasNext():
-            t += it.next().getCollectionTime()
-        return t / 1000.0
-
-    rows = []
-
-    def phase(name, fn):
-        b0, s0 = _cpu_sample()
-        g0 = gc_s()
-        t0 = time.monotonic()
-        out = fn()
-        wall = time.monotonic() - t0
-        b1, s1 = _cpu_sample()
-        row = {"phase": name, "wall": round(wall, 2),
-               "gc_s": round(gc_s() - g0, 2),
-               "cpu_util": round((b1 - b0) / os.sysconf("SC_CLK_TCK")
-                                 / (wall * CPUS), 3)}
-        rows.append(row)
-        print(json.dumps(row), flush=True)
-        return out
-
-    df = spark.read.parquet(path)
-    records = enrich_record_ids(
-        to_records(df, cfg.max_text_bytes, emit_text=True),
-        cfg.surrogate_id_mode,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    phase("parse_cache_build", lambda: records.count())
-    st = phase("conflict_resolve",
-               lambda: resolve_span_conflicts(spark, records,
-                                              cfg.max_conflict_turns))
-    invalid = st[0]
-
-    def fanout():
-        valid = drop_conflicted(records, invalid)
-        resources = build_resources(valid, cfg.surrogate_id_mode)
-        scopes = build_scopes(valid, cfg.surrogate_id_mode)
-        metric_defs = build_metric_defs(valid, resources, scopes,
-                                        cfg.surrogate_id_mode)
-        sinks = {
-            "resources": resources,
-            "instrumentation_scopes": scopes,
-            "metrics": metric_defs,
-            "spans": facts_ops.build_spans(valid, resources, scopes,
-                                           cfg.surrogate_id_mode),
-            "log_records": facts_ops.build_log_records(
-                valid, resources, scopes, cfg.surrogate_id_mode),
-            "metric_data_points": facts_ops.build_points(
-                valid, resources, scopes, metric_defs,
-                cfg.surrogate_id_mode),
-            "rejects": facts_ops.build_rejects(records),
-        }
-        routed = enrich(facts_ops.build_routed(valid), role_dim(spark),
-                        tool_dim(spark))
-        res = plan.PipelineResult(
-            sinks=sinks, routed=routed, accounting=None,
-            by_signal_tool=None, by_time_bucket=None,
-        )
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            a = pool.submit(agg_ops.sink_counts, sinks)
-            b = pool.submit(plan.collect_aggregates, res)
-            a.result()
-            b.result()
-
-    phase("fanout_sinks_aggs", fanout)
-    phase("cache_rescan_control",
-          lambda: records.groupBy("rec_kind").count().collect())
-    total = sum(r["wall"] for r in rows[:3])
-    print(json.dumps({"phase": "TOTAL_benched_equiv", "wall": round(total, 2),
-                      "n_turns": n_turns, "cpus": CPUS}), flush=True)
-    records.unpersist()
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("cmd", choices=["queries", "explain", "phases"])
+    ap.add_argument("cmd", choices=["queries", "explain"])
     ap.add_argument("names", nargs="*")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--cold", action="store_true")
@@ -233,11 +114,8 @@ def main() -> None:
     a = ap.parse_args()
     if a.cmd == "queries":
         cmd_queries(a.names or DEFAULT_QUERIES, a.k, cold=a.cold)
-    elif a.cmd == "explain":
-        cmd_explain(a.names or DEFAULT_QUERIES, a.tag)
     else:
-        n = int(a.names[0]) if a.names else 3_000_000
-        cmd_phases(n)
+        cmd_explain(a.names or DEFAULT_QUERIES, a.tag)
 
 
 if __name__ == "__main__":

@@ -125,15 +125,6 @@ def main() -> None:
         max_exchanges=2,
         note="broadcast role/tool enrichment + one shuffle for the final agg",
     )
-    from sqlite_otel_spark.operators.aggregates import fused_rollup
-
-    audit(
-        "fused_rollup (A1+A2+A3 one-pass)", fused_rollup(res.routed),
-        want=["Expand", "HashAggregate"],
-        max_exchanges=2,
-        note="GROUPING SETS: one Expand + partial/final hash agg — all three "
-             "accounting granularities in a single scan+shuffle",
-    )
     res.unpersist()
 
     salted = run_pipeline(spark, fixture_transcripts(spark), cfg, do_salt=True)

@@ -14,17 +14,15 @@ exact, MinHash+LSH, SimHash, n-gram Jaccard. Spark-first designs:
    the old dropDuplicates shuffle of the full shingle stream is gone —
    the only exchange left is the groupBy's map-side-combined partials
    (65 longs per doc per partition). A fully within-row form
-   (minhash_signatures_inline, array_min over transform) was built and
-   parity-tested but measured SLOWER: Catalyst evaluates higher-order
-   lambdas interpreted, outside whole-stage codegen, while the exploded
-   KM arithmetic + partial min stays codegen'd — kept as the documented
-   alternate. LSH banding turns signatures into (band, band_hash) keys
+   (array_min over transform) measured SLOWER — Catalyst evaluates
+   higher-order lambdas interpreted, outside whole-stage codegen, while
+   the exploded KM arithmetic + partial min stays codegen'd — and was
+   deleted. LSH banding turns signatures into (band, band_hash) keys
    whose equality join yields candidates;
  - SimHash is a 64-column conditional bit-sum (explode + map-side
-   partial agg; a within-row variant simhash_inline exists,
-   parity-tested, same interpreted-HOF caveat as MinHash), near-dups
-   found by 16-bit band equality then exact Hamming verification via
-   bit_count(xor) — all JVM built-ins.
+   partial agg; the within-row variant lost for the same reason and
+   was deleted), near-dups found by 16-bit band equality then exact
+   Hamming verification via bit_count(xor) — all JVM built-ins.
 """
 
 from __future__ import annotations
@@ -250,94 +248,6 @@ def minhash_signatures(sh: DataFrame, num_perm: int = 64,
 
 
 
-def minhash_signatures_inline(docs: DataFrame, num_perm: int = 64,
-                              n: int = 3, hash_fn: str = "xxhash64",
-                              text_col: str = "text",
-                              id_col: str = "doc_id") -> DataFrame:
-    """Fully within-row MinHash signatures, value-identical to
-    ``minhash_signatures(shingles(docs))`` (parity-tested both modes):
-    the distinct-shingle set is ``array_distinct`` WITHIN the row and
-    each permutation minimum is ``array_min(transform(...))`` over it —
-    zero exchanges before banding.
-
-    **Not the default** (measured, sf0.1): Catalyst executes
-    higher-order lambdas INTERPRETED, outside whole-stage codegen, so
-    the 64 array_min(transform) reductions cost more CPU than the
-    exploded form's codegen'd KM arithmetic + map-side partial min —
-    whose shuffle is tiny anyway (65 longs per doc per partition after
-    combine). Since round 4 ``shingles`` dedups within the row too, the
-    grouped form has no large shuffle left to remove, and it wins
-    end-to-end. Kept as the shuffle-ZERO alternate (useful when an
-    input is exchange-hostile, e.g. already perfectly partitioned
-    streaming micro-batches) and as the parity yardstick.
-
-    Docs with no shingles (< n tokens) are dropped, matching the
-    explode form (a NULL signature would otherwise band every short doc
-    with every other). The md5 mode precomputes one (h1, lo, hi) struct
-    per shingle — two md5s, as in km_hash_cols — so the 64 permutation
-    scans do only long arithmetic."""
-    docs = _ensure_parallelism(docs)
-    # bind the token array before the gram lambda (round 6) — see
-    # gram_array_from_tokens for why an inline token expression is
-    # re-evaluated per shingle
-    tok = docs.select(
-        F.col(id_col).alias("doc_id"),
-        tokens_col(F.col(text_col)).alias("__toks"),
-    )
-    sh = F.array_distinct(gram_array_from_tokens(F.col("__toks"), n))
-    d = tok.select("doc_id", sh.alias("__sh")).where(
-        F.size("__sh") > 0
-    )
-    if hash_fn == "md5":
-        def triple(s):
-            h1 = F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-            h2 = F.conv(
-                F.substring(F.md5(F.concat(s, F.lit("#"))), 1, 15), 16, 10
-            ).cast("long")
-            return F.struct(
-                h1.alias("h1"),
-                h2.bitwiseAND(F.lit(_MASK30)).alias("lo"),
-                F.shiftright(h2, 30).bitwiseAND(F.lit(_MASK30)).alias("hi"),
-            )
-
-        d = d.withColumn("__t", F.transform(F.col("__sh"), triple))
-
-        # NOTE: a one-arg lambda is REQUIRED here — F.transform passes
-        # the array INDEX as a second argument to two-arg lambdas, so a
-        # `lambda t, i=i:` default would silently receive the element
-        # position instead of the permutation number.
-        def perm_min(i: int):
-            return F.array_min(
-                F.transform(
-                    F.col("__t"),
-                    lambda t: (
-                        t["h1"]
-                        + F.shiftleft(
-                            (F.lit(i) * t["hi"]).bitwiseAND(F.lit(_MASK30)),
-                            30,
-                        )
-                        + F.lit(i) * t["lo"]
-                    ).bitwiseAND(F.lit(_MASK60)),
-                )
-            )
-
-        cols = [perm_min(i).alias(f"h{i}") for i in range(num_perm)]
-    else:
-        def perm_min(i: int):
-            return F.array_min(
-                F.transform(F.col("__sh"),
-                            lambda s: F.xxhash64(s, F.lit(i)))
-            )
-
-        cols = [perm_min(i).alias(f"h{i}") for i in range(num_perm)]
-    # Closing hash exchange on doc_id (the analogue of the old groupBy
-    # exchange, but carrying 65 longs/doc instead of the shingle
-    # stream): the banding SELF-join consumes signatures on both sides,
-    # and without an exchange to anchor ReuseExchange the whole
-    # projection executes twice — measured 2x the signature wall.
-    return d.select("doc_id", *cols).repartition("doc_id")
-
-
 def minhash_lsh_candidates(sig: DataFrame, bands: int = 16, rows: int = 4,
                            hash_fn: str = "xxhash64") -> DataFrame:
     """Band the signature (bands x rows = num_perm) and join docs whose
@@ -493,54 +403,6 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
             F.when(F.col(f"b{j}") > 0, F.shiftleft(F.lit(1).cast("long"), j)).otherwise(0)
         )
     return sums.select("doc_id", fp.alias("simhash"))
-
-
-def simhash_inline(df: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id", n_bits: int = 64,
-                   hash_fn: str = "xxhash64") -> DataFrame:
-    """Fully within-row SimHash, value-identical to ``simhash`` (parity-
-    tested both modes): token hashes are a within-row ``transform`` and
-    each bit's vote is ``2 * count(bit set) > n_tokens`` via an array
-    filter — zero exchanges before banding. **Not the default**: same
-    interpreted-HOF cost finding as minhash_signatures_inline (the
-    grouped form's shuffle is already map-side-combined partial sums).
-    Docs with no tokens are dropped, matching the explode form. Bag
-    semantics preserved (duplicate tokens vote once each, exactly like
-    the exploded rows)."""
-    df = _ensure_parallelism(df)
-    toks = tokens_col(F.col(text_col))
-    if hash_fn == "md5":
-        hashes = F.transform(
-            toks,
-            lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10)
-            .cast("long"),
-        )
-    else:
-        hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    d = df.select(F.col(id_col).alias("doc_id"), hashes.alias("__h")).where(
-        F.size("__h") > 0
-    )
-    n = F.size(F.col("__h"))
-
-    # one-arg lambda required: F.filter feeds two-arg lambdas the array
-    # index as the second argument (see perm_min note above)
-    def bit_ones(j: int):
-        return F.size(
-            F.filter(
-                F.col("__h"),
-                lambda h: F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1,
-            )
-        )
-
-    fp = F.lit(0).cast("long")
-    for j in range(n_bits):
-        fp = fp.bitwiseOR(
-            F.when(bit_ones(j) * 2 > n,
-                   F.shiftleft(F.lit(1).cast("long"), j)).otherwise(0)
-        )
-    # closing exchange: ReuseExchange anchor for the banding self-join
-    # (see minhash_signatures_inline) — 2 longs/doc
-    return d.select("doc_id", fp.alias("simhash")).repartition("doc_id")
 
 
 def simhash_near_dups(fp: DataFrame, max_hamming: int = 3,

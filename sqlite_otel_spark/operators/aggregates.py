@@ -53,31 +53,6 @@ def sink_counts(sinks: dict[str, DataFrame]) -> dict[str, int]:
     return {name: got[name] for name, _ in items}
 
 
-def fused_rollup(routed_enriched: DataFrame) -> DataFrame:
-    """A1+A2+A3 in ONE pass: GROUPING SETS ((signal_type),
-    (signal_type, tool), (bucket, signal_type, tool)) over the routed
-    stream — one cache scan + one shuffle materializes all three
-    accounting/rollup granularities (classic OLAP multi-rollup).
-    ``gid`` discriminates the set; callers split rows driver-side.
-    The per-granularity operators remain the correctness surface; this
-    is the production path for materializing them together."""
-    bucketed = routed_enriched.withColumn(
-        "bucket_start", F.window("ts", "1 hour")["start"]
-    )
-    return (
-        bucketed.groupingSets(
-            [["signal_type"], ["signal_type", "tool"],
-             ["bucket_start", "signal_type", "tool"]],
-            "signal_type", "tool", "bucket_start",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("n_bytes").alias("n_bytes"),
-            F.grouping_id().alias("gid"),
-        )
-    )
-
-
 def counts_by_signal_tool(routed: DataFrame) -> DataFrame:
     """A2 by tool: groupBy(signal_type, tool).count()."""
     return routed.groupBy("signal_type", "tool").agg(F.count(F.lit(1)).alias("n_turns"))

@@ -104,6 +104,11 @@ METRIC_DEF_SRC = [
     "pos", "name", "description", "unit", "metric_type",
     *RESOURCE_NK, *SCOPE_NK,
 ]
+# metric_def rows once enrich_record_ids resolved their dimension ids
+METRIC_DEF_COLS = [
+    "conv_id", "turn_idx", "pos", "name", "description", "unit",
+    "metric_type", "resource_id", "scope_id",
+]
 
 
 def build_metric_defs(
@@ -119,8 +124,7 @@ def build_metric_defs(
     if mode == "hash" and "resource_id" in records.columns:
         # ids were resolved on the stream by enrich_record_ids
         defs = records.filter(F.col("rec_kind") == "metric_def").select(
-            "conv_id", "turn_idx", "pos", "name", "description", "unit",
-            "metric_type", "resource_id", "scope_id",
+            *METRIC_DEF_COLS
         )
     else:
         defs = records.filter(F.col("rec_kind") == "metric_def").select(

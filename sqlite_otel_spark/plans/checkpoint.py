@@ -19,16 +19,17 @@ Two-stage design keeps resume sound despite the GLOBAL spans PK:
    function of the input, so any resume recomputes-or-reads the same
    verdicts.
 
- stage B (per bucket, embarrassingly parallel): full parse -> drop
-   invalid turns -> facts with HASH surrogate ids (ids are pure
-   functions of natural keys, so buckets never coordinate) -> write
-   facts + this bucket's dimension touches -> append manifest row with
-   per-sink counts (the lineage record).
+ stage B (per bucket, embarrassingly parallel): the shared stages of
+   plans/pipeline.py — parse_records -> admit (stage A's verdicts) ->
+   hash_outputs — with HASH surrogate ids (ids are pure functions of
+   natural keys, so buckets never coordinate); write facts + this
+   bucket's dimension touches -> append manifest row with per-sink
+   counts (the lineage record).
 
- finalize (idempotent): dedup the per-bucket dimension touches into the
-   final dims (first-definition-wins uses the (conv_id, turn_idx, pos)
-   stamps, so the outcome is independent of bucket processing order),
-   and write the run-level aggregates.
+ finalize (idempotent): build the final dims from every bucket's
+   touches with the batch plan's own builders (pipeline.read_touch_dims;
+   first-definition-wins uses the (conv_id, turn_idx, pos) stamps, so
+   the outcome is independent of bucket processing order).
 
 Checkpointed mode requires surrogate_id_mode='hash' (dense ids would
 need global coordination — exactly what this design avoids).
@@ -39,15 +40,18 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from sqlite_otel_spark.config import PipelineConfig
 from sqlite_otel_spark.functions.parse import extract_span_keys, parse_turn
-from sqlite_otel_spark.operators import facts as facts_ops
-from sqlite_otel_spark.operators.dims import METRIC_DEF_SRC, enrich_record_ids
-from sqlite_otel_spark.operators.records import to_records
+from sqlite_otel_spark.plans.pipeline import (
+    admit,
+    hash_outputs,
+    parse_records,
+    read_touch_dims,
+)
 
 _KEYS_SCHEMA = ArrayType(
     StructType([
@@ -57,7 +61,6 @@ _KEYS_SCHEMA = ArrayType(
 )
 
 FACT_TABLES = ("spans", "log_records", "metric_data_points", "rejects")
-DIM_TOUCH_TABLES = ("resources_touch", "scopes_touch", "metric_defs_touch")
 
 
 def bucket_col(cfg: PipelineConfig):
@@ -135,40 +138,9 @@ def _process_bucket(
     bucket: int,
     cfg: PipelineConfig,
 ) -> dict:
-    records = enrich_record_ids(
-        to_records(bucket_df, cfg.max_text_bytes), "hash"
-    ).persist()
+    records = parse_records(bucket_df, cfg, "hash").persist()
     try:
-        rejects = facts_ops.build_rejects(records)
-        valid = records
-        if invalid_turns is not None:
-            rejects = rejects.unionByName(
-                facts_ops.conflict_rejects(records, invalid_turns)
-            )
-            valid = records.join(
-                F.broadcast(invalid_turns), ["conv_id", "turn_idx"], "left_anti"
-            )
-
-        # hash ids only (see module docstring)
-        outputs = {
-            "spans": facts_ops.build_spans(valid, None, None, "hash"),
-            "log_records": facts_ops.build_log_records(valid, None, None, "hash"),
-            "metric_data_points": facts_ops.build_points(valid, None, None, None, "hash"),
-            "rejects": rejects,
-            "resources_touch": (
-                valid.filter(F.col("rec_kind") == "resource")
-                .select("res_attributes", "res_schema_url").dropDuplicates()
-            ),
-            "scopes_touch": (
-                valid.filter(F.col("rec_kind") == "scope")
-                .select("scope_name", "scope_version", "scope_attributes",
-                        "scope_schema_url").dropDuplicates()
-            ),
-            "metric_defs_touch": (
-                valid.filter(F.col("rec_kind") == "metric_def")
-                .select("conv_id", "turn_idx", *METRIC_DEF_SRC)
-            ),
-        }
+        outputs = hash_outputs(*admit(records, invalid_turns))
         # Row counts ride the write itself as observed metrics — the
         # commit must not rescan its own output (7 extra scans/bucket).
         from pyspark.sql import Observation
@@ -291,51 +263,7 @@ def read_manifest(spark, out_dir) -> DataFrame:
 
 
 def finalize(spark: SparkSession, out_dir: str, cfg: PipelineConfig) -> None:
-    res_t = spark.read.parquet(f"{out_dir}/resources_touch")
-    resources = (
-        res_t.select(
-            F.col("res_attributes").alias("attributes"),
-            F.col("res_schema_url").alias("schema_url"),
-        )
-        .dropDuplicates()
-        .select(F.xxhash64(F.lit("res"), "attributes", "schema_url").alias("id"),
-                "attributes", "schema_url")
-    )
-    sco_t = spark.read.parquet(f"{out_dir}/scopes_touch")
-    scopes = (
-        sco_t.select(
-            F.col("scope_name").alias("name"), F.col("scope_version").alias("version"),
-            F.col("scope_attributes").alias("attributes"),
-            F.col("scope_schema_url").alias("schema_url"),
-        )
-        .dropDuplicates()
-        .select(
-            F.xxhash64(F.lit("scope"), "name", "version", "attributes", "schema_url").alias("id"),
-            "name", "version", "attributes", "schema_url",
-        )
-    )
-    md_t = spark.read.parquet(f"{out_dir}/metric_defs_touch")
-    md = md_t.withColumn(
-        "resource_id", F.xxhash64(F.lit("res"), "res_attributes", "res_schema_url")
-    ).withColumn(
-        "scope_id",
-        F.xxhash64(F.lit("scope"), "scope_name", "scope_version",
-                   "scope_attributes", "scope_schema_url"),
-    )
-    w = (
-        Window.partitionBy("name", "metric_type", "resource_id", "scope_id")
-        .orderBy("conv_id", "turn_idx", "pos")
-    )
-    metrics = (
-        md.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.xxhash64(F.lit("metric"), "name", "metric_type", "resource_id", "scope_id").alias("id"),
-            "name", "description", "unit", "metric_type", "resource_id", "scope_id",
-        )
-    )
-    for name, df in (("resources", resources), ("instrumentation_scopes", scopes),
-                     ("metrics", metrics)):
+    for name, df in read_touch_dims(spark, out_dir).items():
         df.write.mode("overwrite").option("compression", cfg.compression).parquet(
             f"{out_dir}/_final/{name}"
         )

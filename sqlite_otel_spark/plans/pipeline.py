@@ -1,21 +1,49 @@
-"""The end-to-end batch plan: parse -> enrich -> route -> sinks -> aggregates.
+"""The collector's write path as named stages, and the batch plan that
+composes them: parse -> admit -> dims/facts -> sinks -> aggregates.
 
 Spark rebuild of the reference's request lifecycle (SURVEY §3): one
 declarative DAG per run instead of one goroutine+transaction per HTTP
-request. Stage map:
+request. Batch (``run_pipeline``), checkpoint buckets
+(``plans/checkpoint.py``) and streaming micro-batches
+(``streaming/stream.py``) run the same stage functions:
+
+    parse_records   Arrow mapInArrow parse (P1-P11, F1-F7,
+                    operators/records.py) + surrogate ids on the flat
+                    record stream (enrich_record_ids)
+    admit           reject sink (F1-F7 failures + spans-PK conflict
+                    rejects) and the conflict-free record stream
+    build_dims      resources / scopes / metrics (D1-D3) from record or
+                    touch rows
+    hash_outputs    the seven hash-id tables one input slice commits:
+                    three facts, rejects and three dimension touches
+
+Each caller owns only its policy:
+
+    caller          conflict verdicts          materialize    write
+    run_pipeline    resolve_span_conflicts     persist() or   write_sinks
+                    over the whole input       staging_dir
+    checkpoint      compute_invalid_turns      persist() per  observed
+                    (stage A, _control/)       bucket         overwrite per
+                                                              bucket; dims at
+                                                              finalize
+    stream          committed-span clashes,    persist() per  concurrent
+                    then within-batch replay   micro-batch    appends; dims
+                                                              on read
+
+Batch stage map:
 
     read transcripts                 (S1 — source)
     [salted repartition on conv_id]  (north-rule §4.2.1 — only when the
                                       input layout is conversation-
                                       clustered; parquet scan splits are
                                       byte-balanced already)
-    Arrow mapInArrow parse           (P1-P11, F1-F7 — one Python pass
-                                      emitting the flat record stream,
-                                      operators/records.py)
+    parse_records                    (one Python pass emitting the flat
+                                      record stream)
     persist()                        (shared upstream of the 3-way fan-out,
                                       R1; flat schema -> pruned rescans)
     cross-turn span-PK resolution    (D4 cascade, single aggregation)
-    dims: resources/scopes/metrics   (D1-D3, dedup + surrogate keys)
+    admit                            (rejects + conflict anti-join)
+    build_dims                       (D1-D3, dedup + surrogate keys)
     facts: spans/log_records/points  (filter+project + D5 FK enrichment)
     role/tool broadcast enrichment   (D5 graft dims)
     sinks + accounting               (S3, A1-A3)
@@ -43,6 +71,9 @@ from sqlite_otel_spark.operators import aggregates as agg
 from sqlite_otel_spark.operators import facts as facts_ops
 from sqlite_otel_spark.operators.conflicts import drop_conflicted, resolve_span_conflicts
 from sqlite_otel_spark.operators.dims import (
+    METRIC_DEF_COLS,
+    RESOURCE_NK,
+    SCOPE_NK,
     build_metric_defs,
     build_resources,
     build_scopes,
@@ -51,15 +82,7 @@ from sqlite_otel_spark.operators.dims import (
 from sqlite_otel_spark.operators.enrich import enrich, role_dim, tool_dim
 from sqlite_otel_spark.operators.records import to_records
 
-SINK_TABLES = (
-    "resources",
-    "instrumentation_scopes",
-    "metrics",
-    "spans",
-    "log_records",
-    "metric_data_points",
-    "rejects",
-)
+DIM_TOUCH_TABLES = ("resources_touch", "scopes_touch", "metric_defs_touch")
 
 
 @dataclass
@@ -75,6 +98,77 @@ class PipelineResult:
     def unpersist(self) -> None:
         for df in self.persisted:
             df.unpersist()
+
+
+def parse_records(src: DataFrame, cfg: PipelineConfig, mode: str) -> DataFrame:
+    """Transcripts -> the flat record stream with surrogate ids resolved.
+    enrich_record_ids swaps the fat dim-key strings on fact rows for
+    8-byte ids (hash mode) before the caller materializes the stream."""
+    return enrich_record_ids(
+        to_records(src, cfg.max_text_bytes, emit_text=cfg.emit_text), mode
+    )
+
+
+def admit(
+    records: DataFrame, invalid_turns: DataFrame | None
+) -> tuple[DataFrame, DataFrame]:
+    """(valid, rejects): the reject sink holds the turns that failed
+    parse/validation plus the turns the spans-PK verdicts invalidated
+    (the rolled-back transactions); ``valid`` is the record stream with
+    those verdict turns anti-joined out."""
+    rejects = facts_ops.build_rejects(records)
+    if invalid_turns is not None:
+        rejects = rejects.unionByName(
+            facts_ops.conflict_rejects(records, invalid_turns)
+        )
+    return drop_conflicted(records, invalid_turns), rejects
+
+
+def build_dims(
+    resource_rows: DataFrame, scope_rows: DataFrame, metric_def_rows: DataFrame,
+    mode: str,
+) -> dict[str, DataFrame]:
+    """The three dimension sinks. The batch plan passes its record stream
+    for all three; checkpoint and stream pass the touch tables written
+    by ``hash_outputs``, which keep ``rec_kind`` so the same builders run
+    over them."""
+    resources = build_resources(resource_rows, mode)
+    scopes = build_scopes(scope_rows, mode)
+    return {
+        "resources": resources,
+        "instrumentation_scopes": scopes,
+        "metrics": build_metric_defs(metric_def_rows, resources, scopes, mode),
+    }
+
+
+def read_touch_dims(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:
+    """Dimensions deduplicated from every committed touch under
+    ``out_dir`` (checkpoint buckets or stream appends): hash ids are pure
+    functions of the natural key, so touches from independent slices
+    merge without coordination."""
+    return build_dims(
+        *(spark.read.parquet(f"{out_dir}/{t}") for t in DIM_TOUCH_TABLES), "hash"
+    )
+
+
+def hash_outputs(valid: DataFrame, rejects: DataFrame) -> dict[str, DataFrame]:
+    """The seven tables one input slice (checkpoint bucket, micro-batch)
+    commits with hash surrogate ids: facts and rejects are final, and
+    the dimension touches are this slice's contribution to the dims
+    (``read_touch_dims``)."""
+
+    def touch(kind: str, cols) -> DataFrame:
+        return valid.filter(F.col("rec_kind") == kind).select("rec_kind", *cols)
+
+    return {
+        "spans": facts_ops.build_spans(valid, None, None, "hash"),
+        "log_records": facts_ops.build_log_records(valid, None, None, "hash"),
+        "metric_data_points": facts_ops.build_points(valid, None, None, None, "hash"),
+        "rejects": rejects,
+        "resources_touch": touch("resource", RESOURCE_NK).dropDuplicates(),
+        "scopes_touch": touch("scope", SCOPE_NK).dropDuplicates(),
+        "metric_defs_touch": touch("metric_def", METRIC_DEF_COLS),
+    }
 
 
 def salted_repartition(df: DataFrame, cfg: PipelineConfig,
@@ -114,9 +208,7 @@ def run_pipeline(
 
     src = salted_repartition(transcripts, cfg, repartition_to) if do_salt else transcripts
 
-    records_all = enrich_record_ids(
-        to_records(src, cfg.max_text_bytes, emit_text=cfg.emit_text), mode
-    )
+    records_all = parse_records(src, cfg, mode)
     # One materialization shared by the reject sink, the conflict pass and
     # the 3-way fan-out (R1): without it every sink would re-run the UDF.
     # The flat schema means each downstream scan prunes to its own columns;
@@ -135,22 +227,13 @@ def run_pipeline(
         records_all = records_all.persist(StorageLevel.MEMORY_AND_DISK)
         persisted.append(records_all)
 
-    rejects_local = facts_ops.build_rejects(records_all)
-
     invalid_turns, n_invalid = resolve_span_conflicts(
         spark, records_all, cfg.max_conflict_turns
     )
-    valid = drop_conflicted(records_all, invalid_turns)
-    if invalid_turns is not None:
-        rejects = rejects_local.unionByName(
-            facts_ops.conflict_rejects(records_all, invalid_turns)
-        )
-    else:
-        rejects = rejects_local
+    valid, rejects = admit(records_all, invalid_turns)
 
-    resources = build_resources(valid, mode)
-    scopes = build_scopes(valid, mode)
-    metric_defs = build_metric_defs(valid, resources, scopes, mode)
+    dims = build_dims(valid, valid, valid, mode)
+    resources, scopes, metric_defs = dims.values()
 
     spans = facts_ops.build_spans(valid, resources, scopes, mode)
     log_records = facts_ops.build_log_records(valid, resources, scopes, mode)
@@ -162,9 +245,7 @@ def run_pipeline(
 
     return PipelineResult(
         sinks={
-            "resources": resources,
-            "instrumentation_scopes": scopes,
-            "metrics": metric_defs,
+            **dims,
             "spans": spans,
             "log_records": log_records,
             "metric_data_points": points,

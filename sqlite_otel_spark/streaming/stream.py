@@ -6,16 +6,18 @@ transaction database/traces.go:11-15). The streaming rebuild maps one
 micro-batch to one ``foreachBatch`` invocation:
 
     readStream(file source over the transcripts table)
-      -> foreachBatch: parse -> reject/route -> conflict-resolve
-         (within batch AND against previously committed spans — the
-         cross-batch persistent state the reference keeps in SQLite's
-         unique indexes) -> append facts + dim touches -> manifest row
+      -> foreachBatch: the shared stages of plans/pipeline.py —
+         parse_records -> admit -> hash_outputs — where the conflict
+         verdicts cover the batch itself AND previously committed spans
+         (the cross-batch persistent state the reference keeps in
+         SQLite's unique indexes) -> append facts + dim touches
 
 Cross-batch state design: instead of flatMapGroupsWithState (explicitly
 avoided, SURVEY §7e), committed span PKs are re-read from the sink and
 anti-joined — the parquet stand-in for an Iceberg MERGE. Dimension
-tables are append+dedup-on-read (``read_dims``), matching the
-get-or-create semantics without a transactional catalog.
+tables are append+dedup-on-read (``read_dims``, the batch plan's own
+dimension builders over the touches), matching the get-or-create
+semantics without a transactional catalog.
 
 Watermarking: the reference has NO late-data policy (rows stored in
 arrival order, database/db.go:86-87); ``windowed_counts`` demonstrates
@@ -26,79 +28,56 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sqlite_otel_spark.config import PipelineConfig
-from sqlite_otel_spark.operators import facts as facts_ops
 from sqlite_otel_spark.operators.conflicts import drop_conflicted, resolve_span_conflicts
-from sqlite_otel_spark.operators.dims import METRIC_DEF_SRC, enrich_record_ids
-from sqlite_otel_spark.operators.records import to_records
+from sqlite_otel_spark.plans.pipeline import (
+    admit,
+    hash_outputs,
+    parse_records,
+    read_touch_dims,
+)
 
 TRANSCRIPT_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
 )
 
 
-def _committed_span_keys(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    path = f"{out_dir}/spans"
+def _clash_turns(spark: SparkSession, records: DataFrame, out_dir: str) -> DataFrame | None:
+    """Turns of this batch whose spans collide with spans committed by
+    earlier batches, or None when there are none."""
     try:
-        return spark.read.parquet(path).select("trace_id", "span_id", "conv_id", "turn_idx")
+        committed = spark.read.parquet(f"{out_dir}/spans").select("trace_id", "span_id")
     except Exception:
-        return None
+        return None  # first batch: nothing committed yet
+    clash = (
+        records.filter(F.col("rec_kind") == "span")
+        .join(committed, ["trace_id", "span_id"], "leftsemi")
+        .select("conv_id", "turn_idx").distinct()
+    )
+    return clash if clash.limit(1).count() > 0 else None
 
 
 def process_batch(
     spark: SparkSession, batch_df: DataFrame, batch_id: int, out_dir: str,
     cfg: PipelineConfig,
 ) -> None:
-    records = enrich_record_ids(
-        to_records(batch_df, cfg.max_text_bytes), "hash"
-    ).persist()
+    records = parse_records(batch_df, cfg, "hash").persist()
     try:
-        rejects = facts_ops.build_rejects(records)
-        valid = records
-
-        # within-batch sequential-commit replay
-        invalid_turns, _ = resolve_span_conflicts(spark, valid, cfg.max_conflict_turns)
-        if invalid_turns is not None:
-            rejects = rejects.unionByName(
-                facts_ops.conflict_rejects(valid, invalid_turns)
-            )
-        valid = drop_conflicted(valid, invalid_turns)
-
-        # cross-batch PK state: turns colliding with already-committed spans
-        committed = _committed_span_keys(spark, out_dir)
-        if committed is not None:
-            batch_keys = valid.filter(F.col("rec_kind") == "span").select(
-                "conv_id", "turn_idx", "trace_id", "span_id"
-            )
-            clash_turns = (
-                batch_keys.join(committed.select("trace_id", "span_id"),
-                                ["trace_id", "span_id"], "leftsemi")
-                .select("conv_id", "turn_idx").distinct()
-            )
-            if clash_turns.limit(1).count() > 0:
-                rejects = rejects.unionByName(
-                    facts_ops.conflict_rejects(valid, clash_turns)
-                )
-                valid = valid.join(clash_turns, ["conv_id", "turn_idx"], "left_anti")
-
-        spans = facts_ops.build_spans(valid, None, None, "hash")
-        logs = facts_ops.build_log_records(valid, None, None, "hash")
-        points = facts_ops.build_points(valid, None, None, None, "hash")
-        res_touch = (
-            valid.filter(F.col("rec_kind") == "resource")
-            .select("res_attributes", "res_schema_url").dropDuplicates()
+        # Verdicts in sequential-commit order: earlier batches' spans
+        # committed before any turn of this one, so a turn colliding
+        # with them always rolls back; the within-batch replay then
+        # runs over the remaining turns only (a rolled-back turn frees
+        # its other keys for later turns, as in the cascade).
+        clash = _clash_turns(spark, records, out_dir)
+        invalid_turns, _ = resolve_span_conflicts(
+            spark, drop_conflicted(records, clash), cfg.max_conflict_turns
         )
-        sco_touch = (
-            valid.filter(F.col("rec_kind") == "scope")
-            .select("scope_name", "scope_version", "scope_attributes",
-                    "scope_schema_url").dropDuplicates()
-        )
-        md_touch = valid.filter(F.col("rec_kind") == "metric_def").select(
-            "conv_id", "turn_idx", *METRIC_DEF_SRC
-        )
+        if clash is not None:
+            invalid_turns = clash if invalid_turns is None else clash.unionByName(invalid_turns)
+        outputs = hash_outputs(*admit(records, invalid_turns))
 
         # concurrent submission (round 6, same rationale as write_sinks):
         # the seven appends are independent sub-DAGs over the shared
@@ -112,13 +91,8 @@ def process_batch(
                 "compression", cfg.compression
             ).parquet(f"{out_dir}/{name}")
 
-        sinks = (
-            ("spans", spans), ("log_records", logs), ("metric_data_points", points),
-            ("rejects", rejects), ("resources_touch", res_touch),
-            ("scopes_touch", sco_touch), ("metric_defs_touch", md_touch),
-        )
-        with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
-            list(pool.map(write_one, sinks))
+        with ThreadPoolExecutor(max_workers=len(outputs)) as pool:
+            list(pool.map(write_one, outputs.items()))
     finally:
         records.unpersist()
 
@@ -152,42 +126,7 @@ def start_stream(
 
 def read_dims(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:
     """Dedup-on-read dimension views over the appended touches."""
-    res = (
-        spark.read.parquet(f"{out_dir}/resources_touch")
-        .select(F.col("res_attributes").alias("attributes"),
-                F.col("res_schema_url").alias("schema_url"))
-        .dropDuplicates()
-        .select(F.xxhash64(F.lit("res"), "attributes", "schema_url").alias("id"),
-                "attributes", "schema_url")
-    )
-    sco = (
-        spark.read.parquet(f"{out_dir}/scopes_touch")
-        .select(F.col("scope_name").alias("name"), F.col("scope_version").alias("version"),
-                F.col("scope_attributes").alias("attributes"),
-                F.col("scope_schema_url").alias("schema_url"))
-        .dropDuplicates()
-        .select(F.xxhash64(F.lit("scope"), "name", "version", "attributes",
-                           "schema_url").alias("id"),
-                "name", "version", "attributes", "schema_url")
-    )
-    md = spark.read.parquet(f"{out_dir}/metric_defs_touch")
-    md = md.withColumn(
-        "resource_id", F.xxhash64(F.lit("res"), "res_attributes", "res_schema_url")
-    ).withColumn(
-        "scope_id", F.xxhash64(F.lit("scope"), "scope_name", "scope_version",
-                               "scope_attributes", "scope_schema_url"),
-    )
-    w = (
-        Window.partitionBy("name", "metric_type", "resource_id", "scope_id")
-        .orderBy("conv_id", "turn_idx", "pos")
-    )
-    metrics = (
-        md.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-        .select(F.xxhash64(F.lit("metric"), "name", "metric_type", "resource_id",
-                           "scope_id").alias("id"),
-                "name", "description", "unit", "metric_type", "resource_id", "scope_id")
-    )
-    return {"resources": res, "instrumentation_scopes": sco, "metrics": metrics}
+    return read_touch_dims(spark, out_dir)
 
 
 def windowed_counts(

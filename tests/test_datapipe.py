@@ -1059,31 +1059,6 @@ def test_asof_join_string_tiebreak(spark):
     assert out[0].r_rid == "zzz" and out[0].r_value == 2.0
 
 
-def test_minhash_inline_matches_grouped(spark, docs):
-    """The shuffle-free within-row signature form must be value-identical
-    to the explode+groupBy form, in BOTH hash families."""
-    from sqlite_otel_spark.datapipe import dedup as dd
-    sh = dd.shingles(docs, n=3)
-    for hf in ("md5", "xxhash64"):
-        a = dd.minhash_signatures(sh, 16, hash_fn=hf).orderBy(
-            "doc_id").collect()
-        b = dd.minhash_signatures_inline(docs, 16, n=3, hash_fn=hf).orderBy(
-            "doc_id").collect()
-        assert a == b, hf
-
-
-def test_simhash_inline_matches_grouped(spark, docs):
-    """The shuffle-free within-row SimHash must be value-identical to
-    the explode+groupBy bit-sum form, in BOTH hash families."""
-    from sqlite_otel_spark.datapipe import dedup as dd
-    for hf, bits in (("md5", 60), ("xxhash64", 64)):
-        a = dd.simhash(docs, n_bits=bits, hash_fn=hf).orderBy(
-            "doc_id").collect()
-        b = dd.simhash_inline(docs, n_bits=bits, hash_fn=hf).orderBy(
-            "doc_id").collect()
-        assert a == b, hf
-
-
 def test_extract_url_domains(spark):
     from sqlite_otel_spark.datapipe import text as dtx
     df = spark.createDataFrame(

@@ -193,9 +193,10 @@ def test_cascade_resolution(pipeline_and_oracle):
     assert names == {"X", "Y-late"}
 
 
-def test_fused_rollup_matches_individual_aggregates(spark):
-    """collect_aggregates' one-job GROUPING SETS path must reproduce the
-    three individually-computed aggregate frames exactly."""
+def test_collect_aggregates_matches_individual_aggregates(spark):
+    """collect_aggregates' one-job finest-grain aggregate, folded on the
+    driver into the three granularities, must reproduce the three
+    individually-computed aggregate frames exactly."""
     from sqlite_otel_spark.plans.pipeline import collect_aggregates
 
     rows = _rows()

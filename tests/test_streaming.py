@@ -1,7 +1,11 @@
 """Structured Streaming variant: micro-batch ingest must persist exactly
 what the sequential oracle persists (arrival order = file order; files
 are fed in canonical (conv_id, turn_idx) order so the cross-batch span
-PK state is comparable), plus a watermarked windowed aggregate."""
+PK state is comparable) and exactly what the batch and checkpoint
+compositions of the same stages persist, plus a watermarked windowed
+aggregate."""
+
+import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -11,7 +15,10 @@ from pyspark.sql import functions as F
 from sqlite_otel_spark.config import PipelineConfig
 from sqlite_otel_spark.fixtures import make_transcripts
 from sqlite_otel_spark.oracle import OracleDB
+from sqlite_otel_spark.plans import checkpoint as cp
+from sqlite_otel_spark.plans.pipeline import run_pipeline
 from sqlite_otel_spark.streaming import stream as st
+from tests.conftest import transcripts_df
 
 SCHEMA = pa.schema([
     ("conv_id", pa.string()), ("turn_idx", pa.int32()), ("role", pa.string()),
@@ -32,11 +39,17 @@ def stream_dirs(tmp_path_factory):
     return rows, str(input_dir), str(tmp_path_factory.mktemp("stream_out"))
 
 
-def test_stream_matches_oracle(spark, stream_dirs):
-    rows, input_dir, out_dir = stream_dirs
+@pytest.fixture(scope="module")
+def streamed(spark, stream_dirs):
+    """The default-config stream drained once into stream_dirs' out dir."""
+    _, input_dir, out_dir = stream_dirs
     q = st.start_stream(spark, input_dir, out_dir, PipelineConfig())
     q.awaitTermination(300)
+    return out_dir
 
+
+def test_stream_matches_oracle(spark, stream_dirs, streamed):
+    rows, _, out_dir = stream_dirs
     oracle = OracleDB().run(rows)
     counts = {
         "spans": spark.read.parquet(f"{out_dir}/spans").count(),
@@ -55,6 +68,67 @@ def test_stream_matches_oracle(spark, stream_dirs):
     # per-record span equality (hash ids aside)
     got = {(r.trace_id, r.span_id) for r in spark.read.parquet(f"{out_dir}/spans").collect()}
     assert got == set(oracle.spans)
+
+
+def _sorted_rows(df):
+    """Every row of a sink as a repr, over its columns in name order
+    (repr keeps NaN and None comparable)."""
+    cols = sorted(c for c in df.columns if c != "bucket")
+    return sorted(repr(tuple(r)) for r in df.select(*cols).collect())
+
+
+def test_batch_checkpoint_stream_parity(spark, stream_dirs, streamed, tmp_path):
+    """Batch ``run_pipeline`` (hash ids), ``run_checkpointed`` over 4
+    buckets and the micro-batch stream compose the same stages, so all
+    seven tables must match row for row — dimension ids and natural
+    keys included — after dropping the checkpoint's bucket column."""
+    rows, _, _ = stream_dirs
+    df = transcripts_df(spark, rows)
+    batch = run_pipeline(spark, df, PipelineConfig())
+    try:
+        want = {name: _sorted_rows(t) for name, t in batch.sinks.items()}
+    finally:
+        batch.unpersist()
+    assert all(want.values())  # every table has rows to compare
+
+    ckpt_dir = str(tmp_path / "ckpt")
+    cp.run_checkpointed(spark, df, ckpt_dir, PipelineConfig(checkpoint_buckets=4))
+    stream_sinks = {t: spark.read.parquet(f"{streamed}/{t}") for t in cp.FACT_TABLES}
+    stream_sinks.update(st.read_dims(spark, streamed))
+    for path, sinks in (("checkpoint", cp.read_sinks(spark, ckpt_dir)),
+                        ("stream", stream_sinks)):
+        assert set(sinks) == set(want), path
+        for name, t in sinks.items():
+            assert _sorted_rows(t) == want[name], (path, name)
+
+
+def test_cross_batch_cascade_is_sequential(spark, tmp_path):
+    """The span-PK cascade split over two micro-batches: A (span X)
+    commits in batch 0; in batch 1, B (X and Y) collides with the
+    committed X and rolls back, so C (Y) commits — as in a sequential
+    run, where B never held Y."""
+    rows = [r for r in make_transcripts(10, seed=1)
+            if r["conv_id"].startswith("conv-cascade")]
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    for i, chunk in enumerate((rows[:1], rows[1:])):
+        path = str(in_dir / f"part-{i:03d}.parquet")
+        pq.write_table(pa.Table.from_pylist(chunk, schema=SCHEMA), path)
+        os.utime(path, (1_000_000 + i, 1_000_000 + i))  # admitted by mtime
+    out_dir = str(tmp_path / "out")
+    q = st.start_stream(spark, str(in_dir), out_dir, PipelineConfig(),
+                        checkpoint_dir=str(tmp_path / "ckpt"))
+    q.awaitTermination(300)
+    assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) == 2
+
+    oracle = OracleDB().run(rows)
+    got = {(r.trace_id, r.span_id, r.name)
+           for r in spark.read.parquet(f"{out_dir}/spans").collect()}
+    assert got == {(k[0], k[1], v["name"]) for k, v in oracle.spans.items()}
+    rejected = {(r.conv_id, r.turn_idx)
+                for r in spark.read.parquet(f"{out_dir}/rejects").collect()}
+    assert rejected == {(r["conv_id"], r["turn_idx"]) for r in oracle.rejects}
+    assert rejected == {("conv-cascade-b", 0)}
 
 
 def test_max_bytes_per_trigger_admission(spark, stream_dirs, tmp_path):
