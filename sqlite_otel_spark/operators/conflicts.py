@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sqlite_otel_spark.session import local_frame
+
 
 class ConflictOverflowError(RuntimeError):
     pass
@@ -108,12 +110,9 @@ def resolve_span_conflicts(
             )
         )
     else:
-        # coalesce(1): the local relation defaults to defaultParallelism
-        # near-empty partitions, and every broadcast build over it would
-        # schedule one task each.
-        dup_df = spark.createDataFrame(
-            sorted(dup_set), schema="trace_id string, span_id string"
-        ).coalesce(1)
+        dup_df = local_frame(
+            spark, sorted(dup_set), "trace_id string, span_id string"
+        )
         probe = span_keys.join(
             F.broadcast(dup_df), ["trace_id", "span_id"], "leftsemi"
         )
@@ -137,14 +136,11 @@ def resolve_span_conflicts(
             committed.update(keys)
     if not invalid:
         return None, 0
-    # coalesce(1): this tiny local relation is broadcast-built several
-    # times downstream (drop_conflicted anti-joins in independent jobs);
-    # at the default parallelism each build was a 32-task mini-job over
-    # near-empty partitions (~0.3 s of pure scheduling each, round-6
-    # stage profile).
-    invalid_df = spark.createDataFrame(
-        invalid, schema="conv_id string, turn_idx int"
-    ).coalesce(1)
+    # A JVM local relation: it is broadcast-built several times
+    # downstream (drop_conflicted anti-joins in independent jobs), so a
+    # Python-list relation would pay a Python-worker scan of the
+    # parallelized rows per build (see session.local_frame).
+    invalid_df = local_frame(spark, invalid, "conv_id string, turn_idx int")
     return invalid_df, len(invalid)
 
 

@@ -15,26 +15,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sqlite_otel_spark.fixtures import role_dim_rows, tool_dim_rows
+from sqlite_otel_spark.session import local_frame
 
 ROLE_DIM_SCHEMA = "role string, role_kind string, is_automated boolean"
 TOOL_DIM_SCHEMA = "tool string, tool_category string, cost_weight double"
 
 
 def role_dim(spark: SparkSession) -> DataFrame:
-    # coalesce(1): a handful of rows otherwise lands on
-    # defaultParallelism near-empty partitions, and every broadcast
-    # build over the dim schedules one task per partition (round-6
-    # stage profile — same fix as the conflict resolver's local
-    # relations)
-    return spark.createDataFrame(
-        role_dim_rows(), schema=ROLE_DIM_SCHEMA
-    ).coalesce(1)
+    return local_frame(spark, role_dim_rows(), ROLE_DIM_SCHEMA)
 
 
 def tool_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        tool_dim_rows(), schema=TOOL_DIM_SCHEMA
-    ).coalesce(1)
+    return local_frame(spark, tool_dim_rows(), TOOL_DIM_SCHEMA)
 
 
 def enrich(df: DataFrame, roles: DataFrame, tools: DataFrame) -> DataFrame:

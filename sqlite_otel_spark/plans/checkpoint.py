@@ -52,6 +52,7 @@ from sqlite_otel_spark.plans.pipeline import (
     parse_records,
     read_touch_dims,
 )
+from sqlite_otel_spark.session import local_frame
 
 _KEYS_SCHEMA = ArrayType(
     StructType([
@@ -183,12 +184,10 @@ def run_checkpointed(
         invalid = compute_invalid_turns(spark, transcripts, cfg)
         with open(control_path, "w") as f:
             json.dump(invalid, f)
-    # coalesce(1): tiny local relation, broadcast-built per bucket job
-    # (see operators/conflicts.py — round-6 near-empty-partition fix)
+    # A JVM local relation, broadcast-built per bucket job: no
+    # Python-worker scan per build (see session.local_frame)
     invalid_df = (
-        spark.createDataFrame(
-            invalid, "conv_id string, turn_idx int"
-        ).coalesce(1)
+        local_frame(spark, invalid, "conv_id string, turn_idx int")
         if invalid
         else None
     )
@@ -239,7 +238,7 @@ def _write_manifest_row(spark, out_dir, bucket, run_id, counts) -> None:
     shared dir would race on the committer's _temporary)."""
     row = [(bucket, run_id, *[counts[t] for t in FACT_TABLES])]
     schema = "bucket int, run_id string, " + ", ".join(f"n_{t} long" for t in FACT_TABLES)
-    spark.createDataFrame(row, schema).coalesce(1).write.mode("overwrite").parquet(
+    local_frame(spark, row, schema).write.mode("overwrite").parquet(
         f"{out_dir}/_manifest/bucket_{bucket}"
     )
 

@@ -7,8 +7,12 @@ timestamps, database/db.go:86-87).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -97,3 +101,26 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple | dict], ddl: str
+) -> DataFrame:
+    """A small driver-built relation (dims, conflict verdicts, manifest
+    rows) as a JVM ``LocalRelation``. ``rows`` are tuples in ``ddl``
+    column order or dicts keyed by column name.
+
+    ``createDataFrame`` over a Python list goes through ``parallelize``,
+    so the relation scans as a PythonRDD (``Scan ExistingRDD``) and
+    every broadcast build over it runs a Python-worker task (0.2-2.3 s
+    each on the batch write path, 4 cores). Handed a ``pyarrow.Table``,
+    Spark builds a ``LocalTableScan`` instead, with or without the Arrow
+    conf and for an empty table too; a broadcast build over it is a
+    JVM-only task. ``coalesce(1)`` keeps that build at one task rather
+    than one per row up to ``defaultParallelism``."""
+    schema = StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [r if isinstance(r, dict) else dict(zip(schema.names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema=schema).coalesce(1)
