@@ -24,10 +24,6 @@ PY
 for MASTER in "local[8]" "local[32]"; do
   rm -rf "${OUT}-${MASTER//[^0-9]/}"
   spark-submit --master "$MASTER" \
-    --conf spark.sql.adaptive.enabled=true \
-    --conf spark.sql.adaptive.skewJoin.enabled=true \
-    --conf spark.sql.shuffle.partitions=32 \
-    --conf spark.sql.session.timeZone=UTC \
     --py-files dist/sqlite_otel_spark.zip \
     scripts/submit_pipeline.py \
     --input .bench_cache/transcripts_submit.parquet \

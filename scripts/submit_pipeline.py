@@ -31,12 +31,12 @@ def main() -> None:
     ap.add_argument("--run-id", default="submit-run")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from sqlite_otel_spark.config import PipelineConfig
+    from sqlite_otel_spark.session import get_spark
     from sqlite_otel_spark.sources.transcripts import health_check, read_transcripts
 
-    spark = SparkSession.builder.getOrCreate()
+    # the library's session defaults; spark-submit's --master wins
+    spark = get_spark(app_name="submit-pipeline")
     assert health_check(spark)
     transcripts = read_transcripts(spark, args.input)
     cfg = PipelineConfig()

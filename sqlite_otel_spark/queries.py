@@ -113,7 +113,7 @@ def _pipeline(spark: SparkSession):
 def pipeline_sink_counts(spark, sf_dir):
     """A2: per-sink row counts — THE north-rule count-equality check.
     One Spark action for all seven sinks (agg.sink_counts unions the
-    seven single-row counts into one job over the shared cache)."""
+    name-tagged sinks into one grouped count over the shared cache)."""
     res = _pipeline(spark)
     rows = list(agg.sink_counts(res.sinks).items())
     return spark.createDataFrame(rows, "sink string, n_rows long")

@@ -57,7 +57,10 @@ def _clash_turns(spark: SparkSession, records: DataFrame, out_dir: str) -> DataF
         .join(committed, ["trace_id", "span_id"], "leftsemi")
         .select("conv_id", "turn_idx").distinct()
     )
-    return clash if clash.limit(1).count() > 0 else None
+    # a plain count, not limit(1).count(): every plan with a limit gets a
+    # fresh JVM-wide counter name in its generated code, so the probe
+    # would compile new classes on every micro-batch
+    return clash if clash.count() > 0 else None
 
 
 def process_batch(

@@ -1188,6 +1188,12 @@ def test_shingle_tokenization_evaluated_once_per_row(spark, docs):
     bound-column form must stay value-identical to the text form."""
     sh_plan = dd.shingles(docs)._jdf.queryExecution().optimizedPlan().toString()
     assert sh_plan.lower().count("regexp_extract_all") == 1, sh_plan
+    # contamination_flags tokenizes once per join branch (eval grams,
+    # train grams): two regexes in the whole plan, none inside a lambda
+    from sqlite_otel_spark.datapipe import text as dtext
+    cf_plan = (dtext.contamination_flags(docs, n=4, eval_mod=2)
+               ._jdf.queryExecution().optimizedPlan().toString())
+    assert cf_plan.lower().count("regexp_extract_all") == 2, cf_plan
     # value parity: gram_array(text) == gram_array_from_tokens(bound col)
     from sqlite_otel_spark.datapipe.text import tokens_col
     sub = docs.filter(F.col("doc_id") < 50)

@@ -10,6 +10,7 @@ import pytest
 
 from sqlite_otel_spark.config import PipelineConfig
 from sqlite_otel_spark.fixtures import make_transcripts
+from sqlite_otel_spark.operators import aggregates
 from sqlite_otel_spark.oracle import OracleDB
 from sqlite_otel_spark.plans.pipeline import run_pipeline
 from tests.conftest import transcripts_df
@@ -42,6 +43,10 @@ def test_sink_counts_match(pipeline_and_oracle):
     result, oracle = pipeline_and_oracle
     got = {name: df.count() for name, df in result.sinks.items()}
     assert got == oracle.sink_counts()
+    assert aggregates.sink_counts(result.sinks) == oracle.sink_counts()
+    # an empty sink forms no group and still counts 0
+    empty = result.sinks["spans"].limit(0)
+    assert aggregates.sink_counts({"empty": empty}) == {"empty": 0}
 
 
 def test_resources_natural_rows(pipeline_and_oracle):
