@@ -2,12 +2,13 @@
 
 Mirrors the reference collector's tunables (handlers/handler_common.go:29
 10 MB body cap; main.go:41-44 rotation defaults) plus the Spark-side knobs
-mandated by the north rule (salting, AQE, broadcast dims, checkpointing).
+that callers actually set (staging, checkpoint buckets, stream admission,
+sink layout).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass
@@ -15,16 +16,6 @@ class PipelineConfig:
     # F3 size guard — reference: handlers/handler_common.go:29 (10 MB).
     # Tests lower this to exercise the oversize-reject path.
     max_text_bytes: int = 10 * 1024 * 1024
-
-    # Surrogate-key strategy for the dedup dimensions (SURVEY §2.4 D1-D3).
-    #  - 'hash'  : id = xxhash64(natural key). Pure function of the row ->
-    #              no join, no shuffle, no coordination; safe at 100 TB and
-    #              under resume. Default.
-    #  - 'dense' : sequential ids via row_number over the (tiny, deduped)
-    #              dimension, closest to the reference's AUTOINCREMENT.
-    #              Requires a single-partition window; only sane because
-    #              dimensions are small by construction.
-    surrogate_id_mode: str = "hash"
 
     # Where the parsed record stream materializes for the sink fan-out:
     #  - None (default): in-memory columnar cache (MEMORY_AND_DISK) —
@@ -43,21 +34,8 @@ class PipelineConfig:
     # Arrow transfer + cache traffic per run (the single largest column).
     emit_text: bool = True
 
-    # Salted repartition of hot conversations (north_rule; SURVEY §4.2.1).
-    salt_buckets: int = 8
-    # Number of shuffle partitions hint; None -> leave session default.
-    shuffle_partitions: int | None = None
-
-    # A5 retention analogue (logging/rotation.go:113-195): top-K newest.
-    retention_top_k: int = 7
-    retention_max_age_days: int = 30
-
-    # Checkpoint/lineage (SURVEY §4.2.4): number of resumable input buckets,
-    # and how many bucket pipelines the driver submits concurrently
-    # (independent sub-DAGs + disjoint output paths; the resume unit is
-    # still one bucket).
+    # Checkpoint/lineage (SURVEY §4.2.4): number of resumable input buckets.
     checkpoint_buckets: int = 16
-    max_concurrent_buckets: int = 4
 
     # Cap on driver-side sequential resolution of cross-turn span PK
     # conflicts (SURVEY §7 risk (c)). Conflicting turns are pathological
@@ -101,12 +79,3 @@ class PipelineConfig:
     # directory level; dimension sinks stay unpartitioned (tiny). Off by
     # default: the sandbox correctness surface compares whole sinks.
     partition_facts_by_day: bool = False
-
-    # Per-sink malformed-row policy (F7): traces/metrics are lenient at the
-    # envelope level but any record error fails the whole turn; logs are
-    # strict end-to-end. These are fixed semantics of the reference
-    # (database/logs.go:24-74 vs database/traces.go:24-43), kept here only
-    # for visibility/documentation.
-    policies: dict = field(
-        default_factory=lambda: {"trace": "lenient", "log": "strict", "metric": "lenient"}
-    )

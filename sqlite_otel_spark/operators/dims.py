@@ -5,20 +5,14 @@ definitions with INSERT..ON CONFLICT DO NOTHING against unique natural-key
 indexes and resolves the surrogate id with a follow-up SELECT
 (database/shared.go:25-163; indexes database/db.go:153-155).
 
-Spark design — two selectable strategies (config.surrogate_id_mode):
-
- 'hash' (default, scale-first): id = xxhash64(kind-tag, natural key).
-   The id is a pure function of the row, so facts compute their FK
-   locally with ZERO joins, zero shuffles, and no cross-partition
-   coordination; dimensions dedup independently. This is what survives
-   100 TB and per-partition resume. Collisions are 64-bit-birthday
-   rare (~n²/2⁶⁵) and detectable (dims are materialized).
-
- 'dense': AUTOINCREMENT-like compact ids via row_number over the deduped
-   dimension ordered by natural key, then a broadcast join puts ids on
-   facts (the D5 lookup-enrichment pattern). Dimensions are tiny by
-   construction (they are dimensions), so the single-partition window is
-   deliberate and bounded.
+Spark design: id = xxhash64(kind-tag, natural key). The id is a pure
+function of the row, so ``enrich_record_ids`` resolves every FK on the
+record stream right after parse with ZERO joins, zero shuffles and no
+cross-partition coordination; facts are then a filter+project, and
+dimensions dedup independently (per batch, checkpoint bucket or
+micro-batch, merging without coordination). This is what survives
+100 TB and per-partition resume. Collisions are 64-bit-birthday rare
+(~n²/2⁶⁵) and detectable (dims are materialized).
 
 Oracle equality is on natural keys + counts, never id values — the
 reference's AUTOINCREMENT ids are arrival-order-dependent (SURVEY §7b).
@@ -30,7 +24,7 @@ key mapped to literal 0.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 RESOURCE_NK = ["res_attributes", "res_schema_url"]
@@ -51,7 +45,7 @@ def metric_id_expr(name: Column, metric_type: Column, rid: Column, sid: Column) 
     return F.xxhash64(F.lit("metric"), name, metric_type, rid, sid)
 
 
-def build_resources(records: DataFrame, mode: str = "hash") -> DataFrame:
+def build_resources(records: DataFrame) -> DataFrame:
     """resources(id, attributes, schema_url) — db.go:63-67. Input is the
     flat record stream (operators/records.py); dimension touches are the
     rec_kind='resource' rows."""
@@ -63,19 +57,14 @@ def build_resources(records: DataFrame, mode: str = "hash") -> DataFrame:
         )
         .dropDuplicates(["attributes", "schema_url"])
     )
-    if mode == "hash":
-        return touched.select(
-            F.xxhash64(F.lit("res"), "attributes", "schema_url").alias("id"),
-            "attributes",
-            "schema_url",
-        )
-    w = Window.orderBy("attributes", "schema_url")  # tiny dim: bounded window
     return touched.select(
-        F.row_number().over(w).cast("long").alias("id"), "attributes", "schema_url"
+        F.xxhash64(F.lit("res"), "attributes", "schema_url").alias("id"),
+        "attributes",
+        "schema_url",
     )
 
 
-def build_scopes(records: DataFrame, mode: str = "hash") -> DataFrame:
+def build_scopes(records: DataFrame) -> DataFrame:
     """instrumentation_scopes(id, name, version, attributes, schema_url)
     — db.go:70-76."""
     touched = (
@@ -88,22 +77,12 @@ def build_scopes(records: DataFrame, mode: str = "hash") -> DataFrame:
         )
         .dropDuplicates(["name", "version", "attributes", "schema_url"])
     )
-    if mode == "hash":
-        return touched.select(
-            F.xxhash64(F.lit("scope"), "name", "version", "attributes", "schema_url").alias("id"),
-            "name", "version", "attributes", "schema_url",
-        )
-    w = Window.orderBy("name", "version", "attributes", "schema_url")
     return touched.select(
-        F.row_number().over(w).cast("long").alias("id"),
+        F.xxhash64(F.lit("scope"), "name", "version", "attributes", "schema_url").alias("id"),
         "name", "version", "attributes", "schema_url",
     )
 
 
-METRIC_DEF_SRC = [
-    "pos", "name", "description", "unit", "metric_type",
-    *RESOURCE_NK, *SCOPE_NK,
-]
 # metric_def rows once enrich_record_ids resolved their dimension ids
 METRIC_DEF_COLS = [
     "conv_id", "turn_idx", "pos", "name", "description", "unit",
@@ -111,26 +90,15 @@ METRIC_DEF_COLS = [
 ]
 
 
-def build_metric_defs(
-    records: DataFrame,
-    resources: DataFrame,
-    scopes: DataFrame,
-    mode: str = "hash",
-) -> DataFrame:
+def build_metric_defs(records: DataFrame) -> DataFrame:
     """metrics(id, name, description, unit, metric_type, resource_id,
     scope_id) — db.go:101-111. First definition wins for description/unit
     (shared.go:140-141): ranked by canonical arrival order
-    (conv_id, turn_idx, in-turn pos)."""
-    if mode == "hash" and "resource_id" in records.columns:
-        # ids were resolved on the stream by enrich_record_ids
-        defs = records.filter(F.col("rec_kind") == "metric_def").select(
-            *METRIC_DEF_COLS
-        )
-    else:
-        defs = records.filter(F.col("rec_kind") == "metric_def").select(
-            "conv_id", "turn_idx", *METRIC_DEF_SRC
-        )
-        defs = attach_dim_ids(defs, resources, scopes, mode)
+    (conv_id, turn_idx, in-turn pos). The metric_def rows carry the ids
+    enrich_record_ids resolved on the stream."""
+    defs = records.filter(F.col("rec_kind") == "metric_def").select(
+        *METRIC_DEF_COLS
+    )
     # First-definition-wins as min_by over the canonical arrival order
     # (conv_id, turn_idx, pos) — a hash aggregate with MAP-SIDE PARTIALS
     # instead of the previous row_number window (which shuffled every
@@ -152,15 +120,10 @@ def build_metric_defs(
             "metric_type", "resource_id", "scope_id",
         )
     )
-    if mode == "hash":
-        id_col = metric_id_expr(
-            F.col("name"), F.col("metric_type"), F.col("resource_id"), F.col("scope_id")
-        )
-    else:
-        w2 = Window.orderBy("name", "metric_type", "resource_id", "scope_id")
-        id_col = F.row_number().over(w2).cast("long")
     return first.select(
-        id_col.alias("id"),
+        metric_id_expr(
+            F.col("name"), F.col("metric_type"), F.col("resource_id"), F.col("scope_id")
+        ).alias("id"),
         "name", "description", "unit", "metric_type", "resource_id", "scope_id",
     )
 
@@ -168,18 +131,16 @@ def build_metric_defs(
 FACT_KINDS = ("span", "log", "point")
 
 
-def enrich_record_ids(records: DataFrame, mode: str = "hash") -> DataFrame:
+def enrich_record_ids(records: DataFrame) -> DataFrame:
     """Resolve surrogate ids ONCE on the record stream right after parse,
-    then (hash mode) null out the six denormalized dimension-key strings
-    on fact rows before the stream is persisted/staged.
+    then null out the six denormalized dimension-key strings on fact rows
+    before the stream is persisted/staged.
 
     Scale rationale: every span/log/point row otherwise carries ~0.5 KB
     of duplicated resource/scope JSON through the cache and every
     downstream scan; after this projection facts carry two 8-byte ids
     (D5 enrichment, database/traces.go:34,62,79) and the full strings
-    survive only on the (rare) dimension-touch rows that need them.
-    Dense mode keeps the strings — its broadcast-join lookup needs the
-    natural keys on facts."""
+    survive only on the (rare) dimension-touch rows that need them."""
     needs_ids = F.col("rec_kind").isin("metric_def", *FACT_KINDS)
     rid = resource_id_expr(F.col("res_attributes"), F.col("res_schema_url"))
     sid = scope_id_expr(
@@ -200,55 +161,8 @@ def enrich_record_ids(records: DataFrame, mode: str = "hash") -> DataFrame:
             ),
         ),
     )
-    if mode != "hash":
-        return out
     keep = F.col("rec_kind").isin("resource", "scope", "metric_def")
     for c in (*RESOURCE_NK, *SCOPE_NK):
         out = out.withColumn(c, F.when(keep, F.col(c)))
     return out
 
-
-def attach_dim_ids(
-    df: DataFrame, resources: DataFrame, scopes: DataFrame, mode: str = "hash"
-) -> DataFrame:
-    """Resolve resource_id / scope_id on a record stream carrying the
-    dimension natural keys (the D5 FK enrichment).
-
-    hash mode: pure column expressions, no join.
-    dense mode: broadcast hash joins against the tiny dims — the explicit
-    F.broadcast of north-rule §4.2.3."""
-    if mode == "hash":
-        return df.withColumn(
-            "resource_id",
-            resource_id_expr(F.col("res_attributes"), F.col("res_schema_url")),
-        ).withColumn(
-            "scope_id",
-            scope_id_expr(
-                F.col("scope_name"), F.col("scope_version"),
-                F.col("scope_attributes"), F.col("scope_schema_url"),
-            ),
-        ).drop(*RESOURCE_NK, *SCOPE_NK)
-
-    res = F.broadcast(
-        resources.select(
-            F.col("id").alias("resource_id"),
-            F.col("attributes").alias("res_attributes"),
-            F.col("schema_url").alias("res_schema_url"),
-        )
-    )
-    sco = F.broadcast(
-        scopes.select(
-            F.col("id").alias("scope_id"),
-            F.col("name").alias("scope_name"),
-            F.col("version").alias("scope_version"),
-            F.col("attributes").alias("scope_attributes"),
-            F.col("schema_url").alias("scope_schema_url"),
-        )
-    )
-    out = (
-        df.join(res, RESOURCE_NK, "left")
-        .join(sco, SCOPE_NK, "left")
-        .withColumn("resource_id", F.coalesce("resource_id", F.lit(0)))
-        .drop(*RESOURCE_NK, *SCOPE_NK)
-    )
-    return out

@@ -4,9 +4,10 @@ The parse stage (operators/records.py) already flattened the OTLP
 envelope — the reference's triple/quadruple nested loops
 (database/traces.go:22-83, database/logs.go:22-81,
 database/metrics.go:27-88) — into a flat record stream discriminated by
-``rec_kind``. Each sink here is a pruned filter+project over that
-stream plus the D5 surrogate-key enrichment: all JVM-side, whole-stage-
-codegen eligible, and (crucially at scale) each sink deserializes only
+``rec_kind``, and enrich_record_ids (operators/dims.py) already put
+the D5 surrogate keys on it. Each sink here is a pruned filter+project
+over that stream: all JVM-side, whole-stage-codegen eligible, no join
+and no shuffle, and (crucially at scale) each sink deserializes only
 its own columns from the cached/staged records.
 
 Each fact row carries graft provenance columns (conv_id, turn_idx, role,
@@ -20,8 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from sqlite_otel_spark.operators.dims import RESOURCE_NK, SCOPE_NK, attach_dim_ids
 
 LINEAGE = ["conv_id", "turn_idx", "role", "tool", "ts"]
 
@@ -40,83 +39,32 @@ POINT_COLS = [
     "value_double", "value_int", "exemplars", "flags",
 ]
 
-_DIM_KEYS = [*RESOURCE_NK, *SCOPE_NK]
-
-SPAN_SRC = [
-    "trace_id", "span_id", "trace_state", "parent_span_id", "name", "kind",
-    "start_time_unix_nano", "end_time_unix_nano", "attributes", "events",
-    "links", "status_code", "status_message", *_DIM_KEYS,
-]
-LOG_SRC = [
-    "time_unix_nano", "observed_time_unix_nano", "severity_number",
-    "severity_text", "body", "attributes", "trace_id", "span_id", "flags",
-    *_DIM_KEYS,
-]
-POINT_SRC = [
-    "metric_name", "metric_type", "attributes", "start_time_unix_nano",
-    "time_unix_nano", "value_double", "value_int", "exemplars", "flags",
-    *_DIM_KEYS,
-]
-
 
 def _kind(records: DataFrame, kind: str, cols: list[str]) -> DataFrame:
     return records.filter(F.col("rec_kind") == kind).select(*LINEAGE, *cols)
 
 
-def _ids_resolved(records: DataFrame, mode: str) -> bool:
-    """True when enrich_record_ids already put resource_id/scope_id on the
-    stream (the hash-mode fast path: facts are a pure filter+project)."""
-    return mode == "hash" and "resource_id" in records.columns
-
-
-def build_spans(records: DataFrame, resources, scopes, mode: str = "hash") -> DataFrame:
+def build_spans(records: DataFrame) -> DataFrame:
     """spans sink (db.go:79-98). Cross-turn PK conflicts must already be
     resolved (operators/conflicts.py); within-turn duplicates were
     rejected at parse."""
-    if _ids_resolved(records, mode):
-        return _kind(records, "span", SPAN_COLS)
-    return attach_dim_ids(
-        _kind(records, "span", SPAN_SRC), resources, scopes, mode
-    ).select(*LINEAGE, *SPAN_COLS)
+    return _kind(records, "span", SPAN_COLS)
 
 
-def build_log_records(records: DataFrame, resources, scopes, mode: str = "hash") -> DataFrame:
-    """log_records sink (db.go:128-143); resource_id=0 rows have a null
+def build_log_records(records: DataFrame) -> DataFrame:
+    """log_records sink (db.go:128-143); resource_id=0 rows had a null
     resource natural key (logs.go:29-35)."""
-    if _ids_resolved(records, mode):
-        return _kind(records, "log", LOG_COLS)
-    return attach_dim_ids(
-        _kind(records, "log", LOG_SRC), resources, scopes, mode
-    ).select(*LINEAGE, *LOG_COLS)
+    return _kind(records, "log", LOG_COLS)
 
 
-def build_points(
-    records: DataFrame, resources, scopes, metric_defs, mode: str = "hash"
-) -> DataFrame:
-    """metric_data_points sink (db.go:114-125): FK to the metrics dim via
-    its 4-part natural key (name, metric_type, resource_id, scope_id)."""
-    if _ids_resolved(records, mode):
-        return _kind(
-            records, "point",
-            [*POINT_COLS, "metric_name", "metric_type", "resource_id", "scope_id"],
-        )
-    pts = attach_dim_ids(_kind(records, "point", POINT_SRC), resources, scopes, mode)
-    if mode == "hash":
-        pts = pts.withColumn(
-            "metric_id",
-            F.xxhash64(F.lit("metric"), "metric_name", "metric_type", "resource_id", "scope_id"),
-        )
-    else:
-        md = F.broadcast(
-            metric_defs.select(
-                F.col("id").alias("metric_id"),
-                F.col("name").alias("metric_name"),
-                "metric_type", "resource_id", "scope_id",
-            )
-        )
-        pts = pts.join(md, ["metric_name", "metric_type", "resource_id", "scope_id"], "left")
-    return pts.select(*LINEAGE, *POINT_COLS, "metric_name", "metric_type",
-                      "resource_id", "scope_id")
+def build_points(records: DataFrame) -> DataFrame:
+    """metric_data_points sink (db.go:114-125): metric_id is the FK to the
+    metrics dim via its 4-part natural key (name, metric_type,
+    resource_id, scope_id), which the rows keep alongside it."""
+    return _kind(
+        records, "point",
+        [*POINT_COLS, "metric_name", "metric_type", "resource_id", "scope_id"],
+    )
 
 
 def build_rejects(records: DataFrame) -> DataFrame:

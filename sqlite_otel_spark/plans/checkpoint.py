@@ -21,18 +21,16 @@ Two-stage design keeps resume sound despite the GLOBAL spans PK:
 
  stage B (per bucket, embarrassingly parallel): the shared stages of
    plans/pipeline.py — parse_records -> admit (stage A's verdicts) ->
-   hash_outputs — with HASH surrogate ids (ids are pure functions of
+   fact_sinks + dim_touches (hash surrogate ids are pure functions of
    natural keys, so buckets never coordinate); write facts + this
    bucket's dimension touches -> append manifest row with per-sink
-   counts (the lineage record).
+   counts (the lineage record). Up to MAX_CONCURRENT_BUCKETS bucket
+   pipelines are in flight at once.
 
  finalize (idempotent): build the final dims from every bucket's
    touches with the batch plan's own builders (pipeline.read_touch_dims;
    first-definition-wins uses the (conv_id, turn_idx, pos) stamps, so
    the outcome is independent of bucket processing order).
-
-Checkpointed mode requires surrogate_id_mode='hash' (dense ids would
-need global coordination — exactly what this design avoids).
 """
 
 from __future__ import annotations
@@ -48,7 +46,8 @@ from sqlite_otel_spark.config import PipelineConfig
 from sqlite_otel_spark.functions.parse import extract_span_keys, parse_turn
 from sqlite_otel_spark.plans.pipeline import (
     admit,
-    hash_outputs,
+    dim_touches,
+    fact_sinks,
     parse_records,
     read_touch_dims,
 )
@@ -62,6 +61,9 @@ _KEYS_SCHEMA = ArrayType(
 )
 
 FACT_TABLES = ("spans", "log_records", "metric_data_points", "rejects")
+# Bucket pipelines the driver submits concurrently: independent sub-DAGs
+# with disjoint output paths; the resume unit is still one bucket.
+MAX_CONCURRENT_BUCKETS = 4
 
 
 def bucket_col(cfg: PipelineConfig):
@@ -139,9 +141,10 @@ def _process_bucket(
     bucket: int,
     cfg: PipelineConfig,
 ) -> dict:
-    records = parse_records(bucket_df, cfg, "hash").persist()
+    records = parse_records(bucket_df, cfg).persist()
     try:
-        outputs = hash_outputs(*admit(records, invalid_turns))
+        valid, rejects = admit(records, invalid_turns)
+        outputs = {**fact_sinks(valid, rejects), **dim_touches(valid)}
         # Row counts ride the write itself as observed metrics — the
         # commit must not rescan its own output (7 extra scans/bucket).
         from pyspark.sql import Observation
@@ -171,8 +174,6 @@ def run_checkpointed(
     {'processed': [...], 'skipped': [...]}. Raise injection via
     ``fail_after_buckets`` simulates a mid-run kill for the resume test."""
     cfg = cfg or PipelineConfig()
-    if cfg.surrogate_id_mode != "hash":
-        raise ValueError("checkpointed mode requires surrogate_id_mode='hash'")
     os.makedirs(f"{out_dir}/_control", exist_ok=True)
 
     # Stage A verdicts: compute once, reuse on resume (pure function of input).
@@ -222,8 +223,7 @@ def run_checkpointed(
             # and the commit granularity (resume unit) is unchanged.
             from concurrent.futures import ThreadPoolExecutor
 
-            workers = max(1, cfg.max_concurrent_buckets)
-            with ThreadPoolExecutor(max_workers=workers) as pool:
+            with ThreadPoolExecutor(max_workers=MAX_CONCURRENT_BUCKETS) as pool:
                 for b in pool.map(do_bucket, todo):
                     processed.append(b)
     finally:

@@ -8,20 +8,23 @@ request. Batch (``run_pipeline``), checkpoint buckets
 (``streaming/stream.py``) run the same stage functions:
 
     parse_records   Arrow mapInArrow parse (P1-P11, F1-F7,
-                    operators/records.py) + surrogate ids on the flat
-                    record stream (enrich_record_ids)
+                    operators/records.py) + hash surrogate ids on the
+                    flat record stream (enrich_record_ids)
     admit           reject sink (F1-F7 failures + spans-PK conflict
                     rejects) and the conflict-free record stream
+    fact_sinks      spans / log_records / metric_data_points + rejects:
+                    filter+project over the admitted stream
+    dim_touches     the dimension-touch rows one input slice commits
+                    (checkpoint bucket, micro-batch)
     build_dims      resources / scopes / metrics (D1-D3) from record or
                     touch rows
-    hash_outputs    the seven hash-id tables one input slice commits:
-                    three facts, rejects and three dimension touches
 
 Each caller owns only its policy:
 
     caller          conflict verdicts          materialize    write
-    run_pipeline    resolve_span_conflicts     persist() or   write_sinks
-                    over the whole input       staging_dir
+    run_pipeline    resolve_span_conflicts     persist() or   write_sinks;
+                    over the whole input       staging_dir    dims from the
+                                                              record stream
     checkpoint      compute_invalid_turns      persist() per  observed
                     (stage A, _control/)       bucket         overwrite per
                                                               bucket; dims at
@@ -44,12 +47,13 @@ Batch stage map:
     cross-turn span-PK resolution    (D4 cascade, single aggregation)
     admit                            (rejects + conflict anti-join)
     build_dims                       (D1-D3, dedup + surrogate keys)
-    facts: spans/log_records/points  (filter+project + D5 FK enrichment)
+    fact_sinks                       (filter+project; the D5 FKs were
+                                      resolved at parse)
     role/tool broadcast enrichment   (D5 graft dims)
     sinks + accounting               (S3, A1-A3)
 
 Shuffle inventory (what actually moves at 100 TB):
- - parse + fact filter/project + hash-mode FK attach: narrow, ZERO
+ - parse + id resolution + fact filter/project: narrow, ZERO
    shuffles end-to-end from scan to fact sink;
  - dim dedup: one shuffle each over the (tiny) distinct dim keys, with
    map-side partial aggregation;
@@ -83,6 +87,8 @@ from sqlite_otel_spark.operators.enrich import enrich, role_dim, tool_dim
 from sqlite_otel_spark.operators.records import to_records
 
 DIM_TOUCH_TABLES = ("resources_touch", "scopes_touch", "metric_defs_touch")
+# Partitions each hot conversation spreads over under salted_repartition.
+SALT_BUCKETS = 8
 
 
 @dataclass
@@ -100,12 +106,12 @@ class PipelineResult:
             df.unpersist()
 
 
-def parse_records(src: DataFrame, cfg: PipelineConfig, mode: str) -> DataFrame:
+def parse_records(src: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Transcripts -> the flat record stream with surrogate ids resolved.
     enrich_record_ids swaps the fat dim-key strings on fact rows for
-    8-byte ids (hash mode) before the caller materializes the stream."""
+    8-byte ids before the caller materializes the stream."""
     return enrich_record_ids(
-        to_records(src, cfg.max_text_bytes, emit_text=cfg.emit_text), mode
+        to_records(src, cfg.max_text_bytes, emit_text=cfg.emit_text)
     )
 
 
@@ -125,19 +131,16 @@ def admit(
 
 
 def build_dims(
-    resource_rows: DataFrame, scope_rows: DataFrame, metric_def_rows: DataFrame,
-    mode: str,
+    resource_rows: DataFrame, scope_rows: DataFrame, metric_def_rows: DataFrame
 ) -> dict[str, DataFrame]:
     """The three dimension sinks. The batch plan passes its record stream
     for all three; checkpoint and stream pass the touch tables written
-    by ``hash_outputs``, which keep ``rec_kind`` so the same builders run
-    over them."""
-    resources = build_resources(resource_rows, mode)
-    scopes = build_scopes(scope_rows, mode)
+    from ``dim_touches``, which keep ``rec_kind`` so the same builders
+    run over them."""
     return {
-        "resources": resources,
-        "instrumentation_scopes": scopes,
-        "metrics": build_metric_defs(metric_def_rows, resources, scopes, mode),
+        "resources": build_resources(resource_rows),
+        "instrumentation_scopes": build_scopes(scope_rows),
+        "metrics": build_metric_defs(metric_def_rows),
     }
 
 
@@ -147,40 +150,45 @@ def read_touch_dims(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:
     functions of the natural key, so touches from independent slices
     merge without coordination."""
     return build_dims(
-        *(spark.read.parquet(f"{out_dir}/{t}") for t in DIM_TOUCH_TABLES), "hash"
+        *(spark.read.parquet(f"{out_dir}/{t}") for t in DIM_TOUCH_TABLES)
     )
 
 
-def hash_outputs(valid: DataFrame, rejects: DataFrame) -> dict[str, DataFrame]:
-    """The seven tables one input slice (checkpoint bucket, micro-batch)
-    commits with hash surrogate ids: facts and rejects are final, and
-    the dimension touches are this slice's contribution to the dims
-    (``read_touch_dims``)."""
+def fact_sinks(valid: DataFrame, rejects: DataFrame) -> dict[str, DataFrame]:
+    """The four fact sinks every caller commits (batch run, checkpoint
+    bucket, micro-batch): final rows, with the surrogate ids
+    ``parse_records`` resolved."""
+    return {
+        "spans": facts_ops.build_spans(valid),
+        "log_records": facts_ops.build_log_records(valid),
+        "metric_data_points": facts_ops.build_points(valid),
+        "rejects": rejects,
+    }
+
+
+def dim_touches(valid: DataFrame) -> dict[str, DataFrame]:
+    """One input slice's (checkpoint bucket, micro-batch) contribution to
+    the dims, merged across slices by ``read_touch_dims``."""
 
     def touch(kind: str, cols) -> DataFrame:
         return valid.filter(F.col("rec_kind") == kind).select("rec_kind", *cols)
 
     return {
-        "spans": facts_ops.build_spans(valid, None, None, "hash"),
-        "log_records": facts_ops.build_log_records(valid, None, None, "hash"),
-        "metric_data_points": facts_ops.build_points(valid, None, None, None, "hash"),
-        "rejects": rejects,
         "resources_touch": touch("resource", RESOURCE_NK).dropDuplicates(),
         "scopes_touch": touch("scope", SCOPE_NK).dropDuplicates(),
         "metric_defs_touch": touch("metric_def", METRIC_DEF_COLS),
     }
 
 
-def salted_repartition(df: DataFrame, cfg: PipelineConfig,
-                       n_partitions: int | None = None) -> DataFrame:
+def salted_repartition(df: DataFrame, n_partitions: int | None = None) -> DataFrame:
     """North-rule §4.2.1: hot conversations (10%+ of turns in one conv_id
     in the fixture) would pin a partition if the input arrived clustered
     by conversation. Repartitioning on (conv_id, salt(turn_idx)) spreads
-    each hot conversation over ``salt_buckets`` partitions while keeping
+    each hot conversation over ``SALT_BUCKETS`` partitions while keeping
     unrelated conversations hashed apart. Parse is embarrassingly
     parallel, so no de-salting is ever needed — downstream wide ops
     shuffle on their own keys."""
-    salt = F.pmod(F.xxhash64("turn_idx"), F.lit(cfg.salt_buckets))
+    salt = F.pmod(F.xxhash64("turn_idx"), F.lit(SALT_BUCKETS))
     if n_partitions:
         return df.repartition(n_partitions, F.col("conv_id"), salt)
     return df.repartition(F.col("conv_id"), salt)
@@ -204,11 +212,10 @@ def run_pipeline(
     explicitly (skew_clustered_* rows). AQE skew-join handling stays on
     in both modes."""
     cfg = cfg or PipelineConfig()
-    mode = cfg.surrogate_id_mode
 
-    src = salted_repartition(transcripts, cfg, repartition_to) if do_salt else transcripts
+    src = salted_repartition(transcripts, repartition_to) if do_salt else transcripts
 
-    records_all = parse_records(src, cfg, mode)
+    records_all = parse_records(src, cfg)
     # One materialization shared by the reject sink, the conflict pass and
     # the 3-way fan-out (R1): without it every sink would re-run the UDF.
     # The flat schema means each downstream scan prunes to its own columns;
@@ -232,25 +239,12 @@ def run_pipeline(
     )
     valid, rejects = admit(records_all, invalid_turns)
 
-    dims = build_dims(valid, valid, valid, mode)
-    resources, scopes, metric_defs = dims.values()
-
-    spans = facts_ops.build_spans(valid, resources, scopes, mode)
-    log_records = facts_ops.build_log_records(valid, resources, scopes, mode)
-    points = facts_ops.build_points(valid, resources, scopes, metric_defs, mode)
-
     routed = facts_ops.build_routed(valid)
     roles, tools = role_dim(spark), tool_dim(spark)
     routed_enriched = enrich(routed, roles, tools)
 
     return PipelineResult(
-        sinks={
-            **dims,
-            "spans": spans,
-            "log_records": log_records,
-            "metric_data_points": points,
-            "rejects": rejects,
-        },
+        sinks={**build_dims(valid, valid, valid), **fact_sinks(valid, rejects)},
         routed=routed_enriched,
         accounting=agg.request_accounting(routed, rejects),
         by_signal_tool=agg.counts_by_signal_tool(routed_enriched),

@@ -7,10 +7,10 @@ micro-batch to one ``foreachBatch`` invocation:
 
     readStream(file source over the transcripts table)
       -> foreachBatch: the shared stages of plans/pipeline.py —
-         parse_records -> admit -> hash_outputs — where the conflict
-         verdicts cover the batch itself AND previously committed spans
-         (the cross-batch persistent state the reference keeps in
-         SQLite's unique indexes) -> append facts + dim touches
+         parse_records -> admit -> fact_sinks + dim_touches — where the
+         conflict verdicts cover the batch itself AND previously
+         committed spans (the cross-batch persistent state the reference
+         keeps in SQLite's unique indexes) -> append facts + dim touches
 
 Cross-batch state design: instead of flatMapGroupsWithState (explicitly
 avoided, SURVEY §7e), committed span PKs are re-read from the sink and
@@ -35,7 +35,8 @@ from sqlite_otel_spark.config import PipelineConfig
 from sqlite_otel_spark.operators.conflicts import drop_conflicted, resolve_span_conflicts
 from sqlite_otel_spark.plans.pipeline import (
     admit,
-    hash_outputs,
+    dim_touches,
+    fact_sinks,
     parse_records,
     read_touch_dims,
 )
@@ -67,7 +68,7 @@ def process_batch(
     spark: SparkSession, batch_df: DataFrame, batch_id: int, out_dir: str,
     cfg: PipelineConfig,
 ) -> None:
-    records = parse_records(batch_df, cfg, "hash").persist()
+    records = parse_records(batch_df, cfg).persist()
     try:
         # Verdicts in sequential-commit order: earlier batches' spans
         # committed before any turn of this one, so a turn colliding
@@ -80,7 +81,8 @@ def process_batch(
         )
         if clash is not None:
             invalid_turns = clash if invalid_turns is None else clash.unionByName(invalid_turns)
-        outputs = hash_outputs(*admit(records, invalid_turns))
+        valid, rejects = admit(records, invalid_turns)
+        outputs = {**fact_sinks(valid, rejects), **dim_touches(valid)}
 
         # concurrent submission (round 6, same rationale as write_sinks):
         # the seven appends are independent sub-DAGs over the shared

@@ -23,7 +23,7 @@ def test_partitioning_invariance(spark):
 
     one = run_pipeline(spark, base.coalesce(1), PipelineConfig(), do_salt=False)
     many = run_pipeline(
-        spark, base, PipelineConfig(salt_buckets=8), repartition_to=16, do_salt=True
+        spark, base, PipelineConfig(), repartition_to=16, do_salt=True
     )
     try:
         assert _fingerprint(one) == _fingerprint(many)

@@ -6,8 +6,14 @@ builds (role/tool dims, conflict verdicts) must plan as JVM
 plan as ``Scan ExistingRDD`` (a PythonRDD) and cost a Python-worker
 task on every broadcast build.
 
+The fact sinks are a filter+project over the persisted record stream
+(surrogate ids are resolved at parse): their executed plans hold no
+shuffle stage.
+
 A repeated run reuses its generated code: the session's codegen cache
 holds the whole write path, so a warm run compiles (almost) nothing."""
+
+import re
 
 import pytest
 
@@ -60,7 +66,7 @@ def test_write_path_has_no_python_scan(spark, source):
 
 
 def test_driver_relations_are_local(spark, source):
-    records = parse_records(source, PipelineConfig(), "hash").persist()
+    records = parse_records(source, PipelineConfig()).persist()
     try:
         invalid, n = resolve_span_conflicts(spark, records)
         assert n == 1
@@ -72,6 +78,29 @@ def test_driver_relations_are_local(spark, source):
             assert PYTHON_SCAN not in plan, name
     finally:
         records.unpersist()
+
+
+def _shuffle_stages(plan: str) -> int:
+    """Distinct AQE ShuffleQueryStage ids in an executed plan (the count
+    scripts/explain_audit.count_exchanges takes)."""
+    return len(set(re.findall(r"ShuffleQueryStage (\d+)", plan)))
+
+
+def test_fact_sinks_do_not_shuffle(spark, source):
+    result = run_pipeline(spark, source, PipelineConfig())
+    try:
+        for name in ("spans", "log_records", "metric_data_points"):
+            df = result.sinks[name]
+            assert df.collect(), name
+            # after collect() the adaptive plan is final
+            assert "isFinalPlan=true" in _plan(df), name
+            assert _shuffle_stages(_plan(df)) == 0, name
+        # the count is not vacuous: a dim dedup does shuffle
+        resources = result.sinks["resources"]
+        resources.collect()
+        assert _shuffle_stages(_plan(resources)) > 0
+    finally:
+        result.unpersist()
 
 
 # Classes a warm batch run may still compile: AQE re-plans a few
