@@ -19,9 +19,9 @@ the *_FIELDS order) straight into batch-level accumulator lists, so the
 hot loop allocates no per-turn dicts/lists and no per-record dicts
 (round 6, profiler-driven: the dict churn + per-field append loop was
 ~35% of kernel wall). Transaction rollback truncates the accumulators
-back to their pre-turn lengths. ``parse_turn`` remains the dict-shaped
-compatibility view (tests, checkpoint replay, oracle comparisons) built
-on the same tuple core — one semantics, two projections.
+back to their pre-turn lengths. ``parse_turn`` is the dict-shaped view
+for tests and direct callers, built on the same tuple core — one
+semantics, two projections.
 
 The pytest oracle (oracle.py) is an independent sequential
 implementation of the same Go semantics; the two share nothing but the
@@ -54,7 +54,6 @@ from __future__ import annotations
 from typing import Any
 
 from pyspark.sql.types import (
-    ArrayType,
     DoubleType,
     IntegerType,
     LongType,
@@ -68,7 +67,6 @@ from sqlite_otel_spark.functions.canonical_json import (
     _loads_stripped,
     _memo_safe,
     canonical_dumps,
-    go_loads,
 )
 
 try:  # C-accelerated memo keys (same fallback contract as canonical_json)
@@ -77,16 +75,11 @@ except ImportError:  # pragma: no cover
     _orjson = None
 
 # ---------------------------------------------------------------------------
-# Output schema of the parse stage (one struct per transcript turn).
+# Per-kind record fields, in the order the extractors emit their tuples.
 # ---------------------------------------------------------------------------
 
 _S = StringType()
 _L = LongType()
-
-
-def _struct(fields: list[tuple[str, Any]]) -> StructType:
-    return StructType([StructField(n, t, True) for n, t in fields])
-
 
 RESOURCE_KEY_FIELDS = [("res_attributes", _S), ("res_schema_url", _S)]
 SCOPE_KEY_FIELDS = [
@@ -151,19 +144,6 @@ POINT_FIELDS = [
     *RESOURCE_KEY_FIELDS,
     *SCOPE_KEY_FIELDS,
 ]
-
-PARSED_SCHEMA = StructType(
-    [
-        StructField("signal_type", _S, True),
-        StructField("error", _S, True),
-        StructField("resources", ArrayType(_struct(RESOURCE_KEY_FIELDS)), True),
-        StructField("scopes", ArrayType(_struct(SCOPE_KEY_FIELDS)), True),
-        StructField("metric_defs", ArrayType(_struct(METRIC_DEF_FIELDS)), True),
-        StructField("spans", ArrayType(_struct(SPAN_FIELDS)), True),
-        StructField("logs", ArrayType(_struct(LOG_FIELDS)), True),
-        StructField("points", ArrayType(_struct(POINT_FIELDS)), True),
-    ]
-)
 
 # Reject reasons (HTTP-status analogues from handlers/handler_common.go).
 REJECT_EMPTY = "empty_body"          # 400, handler_common.go:38-41
@@ -667,7 +647,7 @@ def _extract_point_t(
 # Entry points.
 # ---------------------------------------------------------------------------
 
-# kind -> plural key in the PARSED_SCHEMA dict view
+# kind -> plural key in the parse_turn dict view
 KIND_PLURALS = {
     "resource": "resources",
     "scope": "scopes",
@@ -807,9 +787,9 @@ _KIND_FIELD_NAMES = {
 
 def parse_turn(text: str | None, max_bytes: int = 10 * 1024 * 1024,
                n_bytes: int | None = None) -> dict:
-    """Dict-shaped view over ``parse_turn_into`` (the PARSED_SCHEMA
-    contract used by tests, the checkpoint replay and direct callers):
-    on any error the record arrays are EMPTY (transaction rollback) and
+    """Dict-shaped view over ``parse_turn_into`` for tests and direct
+    callers: one list of field dicts per record kind (``KIND_PLURALS``).
+    On any error the record lists are EMPTY (transaction rollback) and
     ``error`` carries the reject reason."""
     acc = new_accumulator()
     signal_type, error = parse_turn_into(text, max_bytes, n_bytes, 0, acc)
@@ -818,48 +798,6 @@ def parse_turn(text: str | None, max_bytes: int = 10 * 1024 * 1024,
         names = _KIND_FIELD_NAMES[kind]
         out[plural] = [dict(zip(names, t)) for t in acc[kind][0]]
     return out
-
-
-def extract_span_keys(text: str | None, max_bytes: int = 10 * 1024 * 1024) -> list[dict]:
-    """Cheap span-PK scan for the checkpointed plan's global conflict
-    stage (plans/checkpoint.py): returns every (trace_id, span_id) a
-    trace turn WOULD try to insert, without validation or
-    canonicalization (an over-approximation is fine — conflicting turns
-    get a full parse before the sequential replay). Non-trace /
-    undecodable / oversize turns yield []."""
-    if text is None or not text.lstrip().startswith("{"):
-        return []
-    if len(text.encode("utf-8", errors="surrogatepass")) > max_bytes:
-        return []
-    try:
-        data = go_loads(text)
-    except Exception:
-        return []
-    if not isinstance(data, dict) or "resourceSpans" not in data:
-        return []
-    keys: list[dict] = []
-    rss = data.get("resourceSpans")
-    if not isinstance(rss, list):
-        return []
-    for rs in rss:
-        if not isinstance(rs, dict) or not isinstance(rs.get("resource"), dict):
-            continue
-        sss = rs.get("scopeSpans")
-        if not isinstance(sss, list):
-            continue
-        for ss in sss:
-            if not isinstance(ss, dict):
-                continue
-            spans = ss.get("spans")
-            if not isinstance(spans, list):
-                continue
-            for s in spans:
-                if not isinstance(s, dict):
-                    continue
-                tid, sid = s.get("traceId"), s.get("spanId")
-                if isinstance(tid, str) and tid and isinstance(sid, str) and sid:
-                    keys.append({"trace_id": tid, "span_id": sid})
-    return keys
 
 
 # ---------------------------------------------------------------------------
@@ -943,38 +881,3 @@ RECORDS_SCHEMA = StructType(
 
 RECORD_COLS = [f.name for f in RECORDS_SCHEMA.fields]
 
-
-def turn_records(
-    conv_id: str,
-    turn_idx: int,
-    role: str | None,
-    tool: str | None,
-    ts,
-    text: str | None,
-    max_bytes: int = 10 * 1024 * 1024,
-) -> list[dict]:
-    """Parse one turn and emit its flat union records: exactly one
-    'turn' row (accounting + routing + text-equality surface) plus one
-    row per dimension touch / fact the reference would insert. On a
-    turn-level error only the 'turn' row is emitted (tx rollback)."""
-    p = parse_turn(text, max_bytes)
-    lineage = {
-        "conv_id": conv_id,
-        "turn_idx": turn_idx,
-        "role": role,
-        "tool": tool,
-        "ts_us": ts,
-    }
-    recs: list[dict] = [
-        {
-            **lineage,
-            "rec_kind": "turn",
-            "signal_type": p["signal_type"],
-            "error": p["error"],
-            "text": text,
-        }
-    ]
-    for kind, plural in KIND_PLURALS.items():
-        for r in p[plural]:
-            recs.append({**lineage, "rec_kind": kind, **r})
-    return recs

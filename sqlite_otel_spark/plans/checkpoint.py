@@ -10,27 +10,32 @@ buckets without a manifest row. A bucket whose files half-wrote but
 whose manifest row never landed is simply overwritten — bucket writes
 are idempotent.
 
-Two-stage design keeps resume sound despite the GLOBAL spans PK:
+One parse, shared verdicts, per-bucket commit — the batch plan's stages
+with a bucket filter before the write:
 
- stage A (global, cheap, deterministic): scan span keys with a
-   lightweight extractor (no canonicalization), find duplicated keys,
-   fully parse only the conflicting turns, replay the sequential commit
-   order, persist the invalid-turn set under _control/. This is a pure
-   function of the input, so any resume recomputes-or-reads the same
-   verdicts.
+ parse (once per run): parse_records over the input, persisted. A run
+   without saved verdicts parses every turn (the spans PK is global);
+   a resume with saved verdicts parses only its uncommitted buckets.
 
- stage B (per bucket, embarrassingly parallel): the shared stages of
-   plans/pipeline.py — parse_records -> admit (stage A's verdicts) ->
-   fact_sinks + dim_touches (hash surrogate ids are pure functions of
-   natural keys, so buckets never coordinate); write facts + this
-   bucket's dimension touches -> append manifest row with per-sink
-   counts (the lineage record). Up to MAX_CONCURRENT_BUCKETS bucket
-   pipelines are in flight at once.
+ verdicts (global, deterministic): resolve_span_conflicts over the
+   parsed stream — the batch plan's resolver and its adversarial-input
+   cap — saved under _control/ and read back on resume, so every
+   bucket of every run is admitted against the same invalid-turn set.
+
+ commit (per bucket, up to MAX_CONCURRENT_BUCKETS in flight): a filter
+   of the parsed stream -> admit -> fact_sinks + dim_touches (hash
+   surrogate ids are pure functions of natural keys, so buckets never
+   coordinate); write facts + this bucket's dimension touches -> append
+   manifest row with per-sink counts (the lineage record).
 
  finalize (idempotent): build the final dims from every bucket's
    touches with the batch plan's own builders (pipeline.read_touch_dims;
    first-definition-wins uses the (conv_id, turn_idx, pos) stamps, so
-   the outcome is independent of bucket processing order).
+   the outcome is independent of bucket processing order). The parse
+   kernel drops repeat resource/scope touches of log/metric turns within
+   one Arrow batch, which may span buckets; those turns are never
+   invalidated, and finalize runs only once every bucket has committed,
+   so the union of the buckets' touches is the full dim key set.
 """
 
 from __future__ import annotations
@@ -40,10 +45,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+from pyspark.storagelevel import StorageLevel
 
 from sqlite_otel_spark.config import PipelineConfig
-from sqlite_otel_spark.functions.parse import extract_span_keys, parse_turn
+from sqlite_otel_spark.operators.conflicts import resolve_span_conflicts
 from sqlite_otel_spark.plans.pipeline import (
     admit,
     dim_touches,
@@ -52,13 +57,6 @@ from sqlite_otel_spark.plans.pipeline import (
     read_touch_dims,
 )
 from sqlite_otel_spark.session import local_frame
-
-_KEYS_SCHEMA = ArrayType(
-    StructType([
-        StructField("trace_id", StringType()),
-        StructField("span_id", StringType()),
-    ])
-)
 
 FACT_TABLES = ("spans", "log_records", "metric_data_points", "rejects")
 # Bucket pipelines the driver submits concurrently: independent sub-DAGs
@@ -70,96 +68,28 @@ def bucket_col(cfg: PipelineConfig):
     return F.pmod(F.xxhash64("conv_id"), F.lit(cfg.checkpoint_buckets)).cast("int")
 
 
-# ---------------------------------------------------------------------------
-# Stage A — global span-PK verdicts.
-# ---------------------------------------------------------------------------
-
-
-def compute_invalid_turns(
-    spark: SparkSession, transcripts: DataFrame, cfg: PipelineConfig
-) -> list[tuple[str, int]]:
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    max_bytes = cfg.max_text_bytes
-
-    @pandas_udf(_KEYS_SCHEMA)
-    def keys_udf(texts):
-        return texts.map(lambda t: extract_span_keys(t, max_bytes))
-
-    span_keys = (
-        transcripts.filter(F.col("text").contains('"resourceSpans"'))
-        .select("conv_id", "turn_idx", F.explode(keys_udf("text")).alias("k"))
-        .select("conv_id", "turn_idx", "k.trace_id", "k.span_id")
-    )
-    dup = (
-        span_keys.groupBy("trace_id", "span_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-        .drop("n")
-    )
-    cand_turns = (
-        span_keys.join(dup, ["trace_id", "span_id"], "leftsemi")
-        .select("conv_id", "turn_idx")
-        .distinct()
-    )
-    cand = (
-        transcripts.join(cand_turns, ["conv_id", "turn_idx"], "leftsemi")
-        .select("conv_id", "turn_idx", "text")
-        .limit(cfg.max_conflict_turns + 1)
-        .collect()
-    )
-    if len(cand) > cfg.max_conflict_turns:
-        raise RuntimeError("span-PK conflict set exceeds max_conflict_turns")
-
-    # Full parse of the (rare) conflicting turns, then sequential replay.
-    turns = []
-    for r in sorted(cand, key=lambda r: (r.conv_id, r.turn_idx)):
-        p = parse_turn(r.text, cfg.max_text_bytes)
-        if p["error"] is None and p["signal_type"] == "trace":
-            turns.append(((r.conv_id, r.turn_idx),
-                          [(s["trace_id"], s["span_id"]) for s in p["spans"]]))
-    committed: set[tuple] = set()
-    invalid: list[tuple[str, int]] = []
-    for turn, keys in turns:
-        if any(k in committed for k in keys):
-            invalid.append(turn)
-        else:
-            committed.update(keys)
-    return invalid
-
-
-# ---------------------------------------------------------------------------
-# Stage B — per-bucket processing.
-# ---------------------------------------------------------------------------
-
-
 def _process_bucket(
-    spark: SparkSession,
-    bucket_df: DataFrame,
+    records: DataFrame,
     invalid_turns: DataFrame | None,
     out_dir: str,
     bucket: int,
     cfg: PipelineConfig,
 ) -> dict:
-    records = parse_records(bucket_df, cfg).persist()
-    try:
-        valid, rejects = admit(records, invalid_turns)
-        outputs = {**fact_sinks(valid, rejects), **dim_touches(valid)}
-        # Row counts ride the write itself as observed metrics — the
-        # commit must not rescan its own output (7 extra scans/bucket).
-        from pyspark.sql import Observation
+    valid, rejects = admit(records, invalid_turns)
+    outputs = {**fact_sinks(valid, rejects), **dim_touches(valid)}
+    # Row counts ride the write itself as observed metrics — the
+    # commit must not rescan its own output (7 extra scans/bucket).
+    from pyspark.sql import Observation
 
-        counts = {}
-        for name, df in outputs.items():
-            path = f"{out_dir}/{name}/bucket={bucket}"
-            obs = Observation(f"rows_{name}_b{bucket}")
-            df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-                "overwrite"
-            ).option("compression", cfg.compression).parquet(path)
-            counts[name] = obs.get["n"]
-        return counts
-    finally:
-        records.unpersist()
+    counts = {}
+    for name, df in outputs.items():
+        path = f"{out_dir}/{name}/bucket={bucket}"
+        obs = Observation(f"rows_{name}_b{bucket}")
+        df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).option("compression", cfg.compression).parquet(path)
+        counts[name] = obs.get["n"]
+    return counts
 
 
 def run_checkpointed(
@@ -176,37 +106,49 @@ def run_checkpointed(
     cfg = cfg or PipelineConfig()
     os.makedirs(f"{out_dir}/_control", exist_ok=True)
 
-    # Stage A verdicts: compute once, reuse on resume (pure function of input).
-    control_path = f"{out_dir}/_control/invalid_turns.json"
-    if os.path.exists(control_path):
-        with open(control_path) as f:
-            invalid = [tuple(x) for x in json.load(f)]
-    else:
-        invalid = compute_invalid_turns(spark, transcripts, cfg)
-        with open(control_path, "w") as f:
-            json.dump(invalid, f)
-    # A JVM local relation, broadcast-built per bucket job: no
-    # Python-worker scan per build (see session.local_frame)
-    invalid_df = (
-        local_frame(spark, invalid, "conv_id string, turn_idx int")
-        if invalid
-        else None
-    )
-
     committed = read_manifest_buckets(spark, out_dir)
-    with_bucket = transcripts.withColumn("bucket", bucket_col(cfg)).persist()
     processed, skipped = [], []
     todo = []
     for b in range(cfg.checkpoint_buckets):
         (skipped if b in committed else todo).append(b)
 
-    def do_bucket(b: int) -> int:
-        bucket_df = with_bucket.filter(F.col("bucket") == b).drop("bucket")
-        counts = _process_bucket(spark, bucket_df, invalid_df, out_dir, b, cfg)
-        _write_manifest_row(spark, out_dir, b, run_id, counts)
-        return b
-
+    # Verdicts are a pure function of the whole input: computed once,
+    # read back on resume, which then parses only what it commits.
+    control_path = f"{out_dir}/_control/invalid_turns.json"
+    have_verdicts = os.path.exists(control_path)
+    src = (
+        transcripts.filter(bucket_col(cfg).isin(todo))
+        if have_verdicts
+        else transcripts
+    )
+    records = parse_records(src, cfg).persist(StorageLevel.MEMORY_AND_DISK)
     try:
+        if have_verdicts:
+            with open(control_path) as f:
+                invalid = [tuple(x) for x in json.load(f)]
+            # A JVM local relation, broadcast-built per bucket job: no
+            # Python-worker scan per build (see session.local_frame)
+            invalid_df = (
+                local_frame(spark, invalid, "conv_id string, turn_idx int")
+                if invalid
+                else None
+            )
+        else:
+            invalid_df, _ = resolve_span_conflicts(
+                spark, records, cfg.max_conflict_turns
+            )
+            invalid = [] if invalid_df is None else [
+                (r.conv_id, r.turn_idx) for r in invalid_df.collect()
+            ]
+            with open(control_path, "w") as f:
+                json.dump(invalid, f)
+
+        def do_bucket(b: int) -> int:
+            bucket_records = records.filter(bucket_col(cfg) == b)
+            counts = _process_bucket(bucket_records, invalid_df, out_dir, b, cfg)
+            _write_manifest_row(spark, out_dir, b, run_id, counts)
+            return b
+
         if fail_after_buckets is not None:
             # deterministic sequential path for the kill/resume tests
             for b in todo:
@@ -227,7 +169,7 @@ def run_checkpointed(
                 for b in pool.map(do_bucket, todo):
                     processed.append(b)
     finally:
-        with_bucket.unpersist()
+        records.unpersist()
     finalize(spark, out_dir, cfg)
     return {"processed": processed, "skipped": skipped}
 

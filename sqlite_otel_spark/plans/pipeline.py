@@ -25,10 +25,10 @@ Each caller owns only its policy:
     run_pipeline    resolve_span_conflicts     persist() or   write_sinks;
                     over the whole input       staging_dir    dims from the
                                                               record stream
-    checkpoint      compute_invalid_turns      persist() per  observed
-                    (stage A, _control/)       bucket         overwrite per
-                                                              bucket; dims at
-                                                              finalize
+    checkpoint      resolve_span_conflicts     persist() once observed
+                    over the whole input,      per run;       overwrite per
+                    saved in _control/         buckets filter bucket; dims at
+                                               the stream     finalize
     stream          committed-span clashes,    persist() per  concurrent
                     then within-batch replay   micro-batch    appends; dims
                                                               on read

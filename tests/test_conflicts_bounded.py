@@ -5,11 +5,15 @@ semantics and the adversarial-input guard bit-identical."""
 
 import pytest
 
+from sqlite_otel_spark.config import PipelineConfig
+from sqlite_otel_spark.fixtures import make_transcripts
 from sqlite_otel_spark.operators.conflicts import (
     ConflictOverflowError,
     drop_conflicted,
     resolve_span_conflicts,
 )
+from sqlite_otel_spark.plans import checkpoint as cp
+from tests.conftest import transcripts_df
 
 SPAN_SCHEMA = (
     "rec_kind string, conv_id string, turn_idx int, trace_id string, span_id string"
@@ -86,3 +90,16 @@ def test_locally_failed_turns_excluded(spark):
     )
     invalid, n = resolve_span_conflicts(spark, recs, 100)
     assert invalid is None and n == 0
+
+
+def test_checkpoint_overflow_is_the_batch_guard(spark, tmp_path):
+    # the checkpoint's verdicts come from resolve_span_conflicts, so the
+    # cascade fixture's one conflict trips its guard at cap 0 before any
+    # bucket commits
+    rows = make_transcripts(10, seed=1)
+    assert any(r["conv_id"] == "conv-cascade-b" for r in rows)
+    out = str(tmp_path / "ckpt")
+    with pytest.raises(ConflictOverflowError):
+        cp.run_checkpointed(spark, transcripts_df(spark, rows), out,
+                            PipelineConfig(max_conflict_turns=0))
+    assert cp.read_manifest_buckets(spark, out) == set()

@@ -1,7 +1,7 @@
 """Per-operator unit tests for the parse stage's edge semantics
 (SURVEY §5.2: one test per §2 operator ID; §7 risk (a) — encode each
 edge-case divergence as a unit test). Pure Python: parse_turn /
-canonical_dumps / turn_records, cross-checked against the independent
+canonical_dumps, cross-checked against the independent
 sequential oracle where both define the behavior.
 
 Reference citations per case are in the assertions' comments.
@@ -19,7 +19,6 @@ from sqlite_otel_spark.functions.parse import (
     REJECT_OVERSIZE,
     REJECT_UNKNOWN_SIGNAL,
     parse_turn,
-    turn_records,
 )
 from sqlite_otel_spark.oracle import OracleDB
 
@@ -368,20 +367,3 @@ def test_parse_agrees_with_oracle_on_fixture_edges():
         if (r["conv_id"], r["turn_idx"]) not in oracle_rejected
     )
     assert n_spans == len(db.spans)
-
-
-# --------------------------------------------------------------------------
-# turn_records emission shape
-# --------------------------------------------------------------------------
-
-def test_turn_records_emission():
-    recs = turn_records("c", 1, "user", "bash", 12345, trace(RS))
-    kinds = [r["rec_kind"] for r in recs]
-    assert kinds[0] == "turn"
-    assert kinds.count("span") == 1 and kinds.count("resource") == 1
-    turn = recs[0]
-    assert turn["signal_type"] == "trace" and turn["error"] is None
-    assert all(r["conv_id"] == "c" and r["turn_idx"] == 1 for r in recs)
-    # rejected turn -> only the turn row (tx rollback)
-    bad = turn_records("c", 2, "user", "bash", 12345, "not json")
-    assert len(bad) == 1 and bad[0]["error"] == REJECT_NOT_JSON
