@@ -61,21 +61,13 @@ class PipelineConfig:
     target_file_bytes: int | None = None
     compression: str = "zstd"
 
-    # Sink table format (north_star: per-sink Iceberg tables).
-    #  - 'parquet' (default): plain parquet directories — the sandbox
-    #    equivalent (no Iceberg catalog/jars here).
-    #  - 'iceberg': writeTo(<iceberg_table_prefix>.<sink>) snapshot
-    #    commits (≙ the reference's per-request SQLite transaction,
-    #    database/traces.go:11-15,86); falls back to parquet with a
-    #    warning when no Iceberg catalog is configured.
-    table_format: str = "parquet"
-    iceberg_table_prefix: str = "local.otel"
-
     # Sink partition layout (SURVEY §7 M4: "partition layout
     # (signal_type, days(ts))"). When True, the fact sinks (spans,
     # log_records, metric_data_points, rejects) are written partitioned
     # by a derived ts_day column (days(ts) — the Iceberg transform's
-    # parquet equivalent), so time-ranged reads partition-prune at the
-    # directory level; dimension sinks stay unpartitioned (tiny). Off by
-    # default: the sandbox correctness surface compares whole sinks.
+    # parquet equivalent) on every path — batch, checkpoint buckets and
+    # stream appends share one writer — so time-ranged reads
+    # partition-prune at the directory level; dimension sinks stay
+    # unpartitioned (tiny). Off by default: the correctness surface
+    # compares whole sinks.
     partition_facts_by_day: bool = False

@@ -25,13 +25,17 @@ with a bucket filter before the write:
  commit (per bucket, up to MAX_CONCURRENT_BUCKETS in flight): a filter
    of the parsed stream -> admit -> fact_sinks + dim_touches (hash
    surrogate ids are pure functions of natural keys, so buckets never
-   coordinate); write facts + this bucket's dimension touches -> append
-   manifest row with per-sink counts (the lineage record).
+   coordinate); write facts + this bucket's dimension touches through
+   the batch plan's writer (``write_tables``, leaf ``/bucket=N``, so
+   the sink layout options hold as in a batch run), counting rows with
+   observed metrics on the write itself -> append manifest row with
+   per-sink counts (the lineage record).
 
  finalize (idempotent): build the final dims from every bucket's
    touches with the batch plan's own builders (pipeline.read_touch_dims;
    first-definition-wins uses the (conv_id, turn_idx, pos) stamps, so
-   the outcome is independent of bucket processing order). The parse
+   the outcome is independent of bucket processing order) and write
+   them under ``_final/`` with ``write_tables``. The parse
    kernel drops repeat resource/scope touches of log/metric turns within
    one Arrow batch, which may span buckets; those turns are never
    invalidated, and finalize runs only once every bucket has committed,
@@ -43,22 +47,23 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from sqlite_otel_spark.config import PipelineConfig
 from sqlite_otel_spark.operators.conflicts import resolve_span_conflicts
 from sqlite_otel_spark.plans.pipeline import (
+    FACT_TABLES,
     admit,
     dim_touches,
     fact_sinks,
     parse_records,
     read_touch_dims,
+    write_tables,
 )
 from sqlite_otel_spark.session import local_frame
 
-FACT_TABLES = ("spans", "log_records", "metric_data_points", "rejects")
 # Bucket pipelines the driver submits concurrently: independent sub-DAGs
 # with disjoint output paths; the resume unit is still one bucket.
 MAX_CONCURRENT_BUCKETS = 4
@@ -79,17 +84,9 @@ def _process_bucket(
     outputs = {**fact_sinks(valid, rejects), **dim_touches(valid)}
     # Row counts ride the write itself as observed metrics — the
     # commit must not rescan its own output (7 extra scans/bucket).
-    from pyspark.sql import Observation
-
-    counts = {}
-    for name, df in outputs.items():
-        path = f"{out_dir}/{name}/bucket={bucket}"
-        obs = Observation(f"rows_{name}_b{bucket}")
-        df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-            "overwrite"
-        ).option("compression", cfg.compression).parquet(path)
-        counts[name] = obs.get["n"]
-    return counts
+    observed = {name: Observation(f"rows_{name}_b{bucket}") for name in outputs}
+    write_tables(outputs, out_dir, cfg, leaf=f"/bucket={bucket}", observe=observed)
+    return {name: obs.get["n"] for name, obs in observed.items()}
 
 
 def run_checkpointed(
@@ -204,10 +201,7 @@ def read_manifest(spark, out_dir) -> DataFrame:
 
 
 def finalize(spark: SparkSession, out_dir: str, cfg: PipelineConfig) -> None:
-    for name, df in read_touch_dims(spark, out_dir).items():
-        df.write.mode("overwrite").option("compression", cfg.compression).parquet(
-            f"{out_dir}/_final/{name}"
-        )
+    write_tables(read_touch_dims(spark, out_dir), f"{out_dir}/_final", cfg)
 
 
 def read_sinks(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:

@@ -19,19 +19,20 @@ request. Batch (``run_pipeline``), checkpoint buckets
     build_dims      resources / scopes / metrics (D1-D3) from record or
                     touch rows
 
-Each caller owns only its policy:
+Each caller owns only its policy; all three write through
+``write_tables``, so the sink layout options hold on every path:
 
-    caller          conflict verdicts          materialize    write
-    run_pipeline    resolve_span_conflicts     persist() or   write_sinks;
+    caller          conflict verdicts          materialize    write_tables
+    run_pipeline    resolve_span_conflicts     persist() or   overwrite;
                     over the whole input       staging_dir    dims from the
                                                               record stream
-    checkpoint      resolve_span_conflicts     persist() once observed
-                    over the whole input,      per run;       overwrite per
-                    saved in _control/         buckets filter bucket; dims at
-                                               the stream     finalize
-    stream          committed-span clashes,    persist() per  concurrent
-                    then within-batch replay   micro-batch    appends; dims
-                                                              on read
+    checkpoint      resolve_span_conflicts     persist() once overwrite
+                    over the whole input,      per run;       leaf
+                    saved in _control/         buckets filter /bucket=N;
+                                               the stream     dims at
+                                                              finalize
+    stream          committed-span clashes,    persist() per  append; dims
+                    then within-batch replay   micro-batch    on read
 
 Batch stage map:
 
@@ -66,7 +67,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -152,6 +153,11 @@ def read_touch_dims(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:
     return build_dims(
         *(spark.read.parquet(f"{out_dir}/{t}") for t in DIM_TOUCH_TABLES)
     )
+
+
+# The four fact sinks, in ``fact_sinks`` order: the tables day-partitioned
+# by ``write_tables`` and counted in the checkpoint manifest.
+FACT_TABLES = ("spans", "log_records", "metric_data_points", "rejects")
 
 
 def fact_sinks(valid: DataFrame, rejects: DataFrame) -> dict[str, DataFrame]:
@@ -293,66 +299,44 @@ def derive_max_records_per_file(
     return max(1, int(target_bytes / bytes_per_row))
 
 
-def _is_catalog_missing(e: Exception) -> bool:
-    """True when an Iceberg ``writeTo`` failed because no Iceberg
-    catalog / data source is configured or resolvable (analysis-time
-    environment gap), as opposed to a genuine failure. An
-    AnalysisException alone is NOT sufficient (ADVICE r3): schema
-    mismatches, incompatible column types and table conflicts against a
-    CONFIGURED catalog are AnalysisExceptions too and must propagate —
-    so every path requires one of the catalog/data-source-missing
-    markers (error class or message text) before permitting the parquet
-    fallback."""
-    msg = str(e)
-    try:
-        from pyspark.errors import AnalysisException
+def write_tables(
+    tables: dict[str, DataFrame],
+    out_dir: str,
+    cfg: PipelineConfig | None = None,
+    mode: str = "overwrite",
+    leaf: str = "",
+    observe: dict[str, Observation] | None = None,
+) -> None:
+    """S3/S4: the one sink writer (≙ the reference's per-request SQLite
+    transaction + schema auto-init, database/db.go:53-165): each table
+    lands as a parquet directory ``{out_dir}/{name}{leaf}``, committed
+    atomically per table. Its callers:
 
-        if isinstance(e, AnalysisException):
-            # include the structured error class (Spark 3.4+) in the
-            # marker scan; non-Analysis exceptions scan the message only
-            get_cls = getattr(e, "getErrorClass", None)
-            cls = get_cls() if callable(get_cls) else None
-            if cls:
-                msg = f"{cls} {msg}"
-    except ImportError:  # pragma: no cover
-        pass
-    markers = (
-        "CATALOG_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND", "UnresolvedRelation",
-        "is not a valid Spark catalog", "Cannot find catalog plugin",
-        "DATA_SOURCE_NOT_FOUND", "Failed to find the data source: iceberg",
-        "Multiple sources found for iceberg",
-        # the unconfigured-catalog symptom on a vanilla session: the
-        # catalog part of `<cat>.<ns>.<table>` doesn't resolve, so the
-        # identifier falls through to spark_catalog as a multi-part
-        # namespace it cannot represent
-        "REQUIRES_SINGLE_PART_NAMESPACE",
-    )
-    return any(m in msg for m in markers)
+        write_sinks      batch run          mode="overwrite", leaf=""
+        checkpoint       one bucket         mode="overwrite",
+                                            leaf="/bucket={b}"
+                         finalize dims      mode="overwrite", leaf=""
+                                            (out_dir .../_final)
+        stream           one micro-batch    mode="append", leaf=""
 
+    Layout holds on every path: ``cfg.compression``; file rotation (A4)
+    with ``target_file_bytes`` deriving maxRecordsPerFile from measured
+    parquet row width (see derive_max_records_per_file), else the
+    static ``max_records_per_file`` cap; and, with
+    ``partition_facts_by_day``, the fact sinks partitioned by ts_day.
 
-def write_sinks(result: PipelineResult, out_dir: str, cfg: PipelineConfig | None = None) -> None:
-    """S3/S4: atomic per-table commits (≙ the reference's per-request
-    SQLite transaction + schema auto-init, database/db.go:53-165).
+    ``observe`` (the checkpoint's manifest counts) maps table names to
+    Observations of each table's written row count. They attach after
+    the rotation probe: an Observation completes on the first action
+    over its DataFrame, and the probe's sample would complete it with a
+    partial count.
 
-    Table format (cfg.table_format):
-     - 'iceberg': ``writeTo(...).createOrReplace()`` — one Iceberg
-       snapshot commit per sink (readers see old-or-new, never partial,
-       matching WAL readers-vs-writer semantics, database/db.go:26-28).
-       On a cluster the dimension get-or-create would become
-       ``MERGE INTO dim USING touches ON natural_key WHEN NOT MATCHED
-       THEN INSERT`` per batch; falls back to parquet when no catalog
-       is configured (this sandbox has no Iceberg jars).
-     - 'parquet' (default): plain parquet directory per sink.
-
-    File rotation (A4): ``target_file_bytes`` derives maxRecordsPerFile
-    from measured parquet row width (see derive_max_records_per_file),
-    else the static ``max_records_per_file`` cap applies.
-
-    The seven sink branches are independent sub-DAGs over the shared
-    persisted record stream, so they are submitted CONCURRENTLY from
-    driver threads (Spark's FIFO scheduler interleaves their stages):
-    sequential submission would leave most of the cluster idle on the
-    small dimension writes while paying full scheduling latency 7x."""
+    The tables are independent sub-DAGs (over the shared persisted
+    record stream, for the fact and touch tables), so they are submitted
+    CONCURRENTLY from driver threads (Spark's FIFO scheduler interleaves
+    their stages): sequential submission would leave most of the
+    cluster idle on the small dimension writes while paying full
+    scheduling latency once per table."""
     cfg = cfg or PipelineConfig()
 
     def write_one(item):
@@ -364,55 +348,35 @@ def write_sinks(result: PipelineResult, out_dir: str, cfg: PipelineConfig | None
             )
         if per_file is None:
             per_file = cfg.max_records_per_file
-        if cfg.table_format == "iceberg":
-            try:
-                (
-                    df.writeTo(f"{cfg.iceberg_table_prefix}.{name}")
-                    .using("iceberg")
-                    .tableProperty("write.parquet.compression-codec", cfg.compression)
-                    .tableProperty("write.target-file-size-bytes",
-                                   str(cfg.target_file_bytes or 512 * 1024 * 1024))
-                    .createOrReplace()
-                )
-                return
-            except Exception as e:
-                # Fall back to parquet ONLY for catalog-resolution
-                # failures (no Iceberg jars/catalog configured — the
-                # sandbox case). A genuine snapshot-commit failure on a
-                # configured catalog must surface, or the atomic-commit
-                # contract silently degrades (ADVICE r2 #2).
-                if not _is_catalog_missing(e):
-                    raise
-                import warnings
-
-                warnings.warn(
-                    f"iceberg write for sink '{name}' unavailable "
-                    f"({type(e).__name__}); falling back to parquet"
-                )
-        writer = df
         partition_cols: list[str] = []
         if (cfg.partition_facts_by_day and "ts" in df.columns
-                and name in ("spans", "log_records", "metric_data_points",
-                             "rejects")):
+                and name in FACT_TABLES):
             # M4 partition layout: days(ts) as a directory-level
             # partition column — time-ranged scans prune partitions
             # before reading a byte (the parquet analogue of the
             # Iceberg days() transform the north_star names).
-            writer = df.withColumn("ts_day", F.to_date("ts"))
+            df = df.withColumn("ts_day", F.to_date("ts"))
             partition_cols = ["ts_day"]
+        if observe:
+            df = df.observe(observe[name], F.count(F.lit(1)).alias("n"))
         w = (
-            writer.write.mode("overwrite")
+            df.write.mode(mode)
             .option("compression", cfg.compression)
             .option("maxRecordsPerFile", per_file)
         )
         if partition_cols:
             w = w.partitionBy(*partition_cols)
-        w.parquet(f"{out_dir}/{name}")
+        w.parquet(f"{out_dir}/{name}{leaf}")
 
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=len(result.sinks)) as pool:
-        list(pool.map(write_one, result.sinks.items()))
+    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
+        list(pool.map(write_one, tables.items()))
+
+
+def write_sinks(result: PipelineResult, out_dir: str, cfg: PipelineConfig | None = None) -> None:
+    """The batch run's seven sinks through ``write_tables``."""
+    write_tables(result.sinks, out_dir, cfg)
 
 
 def collect_aggregates(result: PipelineResult) -> dict[str, list]:

@@ -1805,7 +1805,7 @@ def a4_rotation_file_count(spark, sf_dir):
     import shutil as _shutil
     import tempfile as _tempfile
 
-    from sqlite_otel_spark.plans.pipeline import PipelineResult, write_sinks
+    from sqlite_otel_spark.plans.pipeline import write_tables
 
     df = (
         spark.range(1000)
@@ -1814,12 +1814,7 @@ def a4_rotation_file_count(spark, sf_dir):
     )
     out = _tempfile.mkdtemp(prefix="a4_rotation_")
     try:
-        write_sinks(
-            PipelineResult(sinks={"t": df}, routed=None, accounting=None,
-                           by_signal_tool=None, by_time_bucket=None),
-            out,
-            PipelineConfig(max_records_per_file=200),
-        )
+        write_tables({"t": df}, out, PipelineConfig(max_records_per_file=200))
         files = _glob.glob(f"{out}/t/*.parquet")
         n_rows = spark.read.parquet(f"{out}/t").count()
         return spark.createDataFrame(
@@ -1849,7 +1844,7 @@ def c11_compression_codecs(spark, sf_dir):
     import shutil as _shutil
     import tempfile as _tempfile
 
-    from sqlite_otel_spark.plans.pipeline import PipelineResult, write_sinks
+    from sqlite_otel_spark.plans.pipeline import write_tables
 
     df = spark.range(400).select(
         "id", F.md5(F.col("id").cast("string")).alias("payload")
@@ -1859,12 +1854,7 @@ def c11_compression_codecs(spark, sf_dir):
                        ("zstd", ".zstd.parquet")):
         out = _tempfile.mkdtemp(prefix=f"c11_{codec}_")
         try:
-            write_sinks(
-                PipelineResult(sinks={"t": df}, routed=None, accounting=None,
-                               by_signal_tool=None, by_time_bucket=None),
-                out,
-                PipelineConfig(compression=codec),
-            )
+            write_tables({"t": df}, out, PipelineConfig(compression=codec))
             files = _glob.glob(f"{out}/t/*.parquet")
             back = spark.read.parquet(f"{out}/t")
             rows.append((

@@ -11,6 +11,9 @@ micro-batch to one ``foreachBatch`` invocation:
          conflict verdicts cover the batch itself AND previously
          committed spans (the cross-batch persistent state the reference
          keeps in SQLite's unique indexes) -> append facts + dim touches
+         through the batch plan's writer (``write_tables``,
+         mode="append"), so codec, file rotation and the day
+         partitioning of the fact sinks match a batch run
 
 Cross-batch state design: instead of flatMapGroupsWithState (explicitly
 avoided, SURVEY §7e), committed span PKs are re-read from the sink and
@@ -39,6 +42,7 @@ from sqlite_otel_spark.plans.pipeline import (
     fact_sinks,
     parse_records,
     read_touch_dims,
+    write_tables,
 )
 
 TRANSCRIPT_DDL = (
@@ -82,22 +86,10 @@ def process_batch(
         if clash is not None:
             invalid_turns = clash if invalid_turns is None else clash.unionByName(invalid_turns)
         valid, rejects = admit(records, invalid_turns)
-        outputs = {**fact_sinks(valid, rejects), **dim_touches(valid)}
-
-        # concurrent submission (round 6, same rationale as write_sinks):
-        # the seven appends are independent sub-DAGs over the shared
-        # persisted batch; sequential submission serialized seven small
-        # jobs' scheduling latency into every micro-batch.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def write_one(item):
-            name, df = item
-            df.write.mode("append").option(
-                "compression", cfg.compression
-            ).parquet(f"{out_dir}/{name}")
-
-        with ThreadPoolExecutor(max_workers=len(outputs)) as pool:
-            list(pool.map(write_one, outputs.items()))
+        write_tables(
+            {**fact_sinks(valid, rejects), **dim_touches(valid)},
+            out_dir, cfg, mode="append",
+        )
     finally:
         records.unpersist()
 

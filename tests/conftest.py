@@ -1,3 +1,4 @@
+import pyarrow as pa
 import pytest
 
 from sqlite_otel_spark.session import get_spark
@@ -5,6 +6,12 @@ from sqlite_otel_spark.session import get_spark
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
 )
+# The same schema for transcript parquet files written with pyarrow
+# (stream inputs)
+TRANSCRIPT_ARROW_SCHEMA = pa.schema([
+    ("conv_id", pa.string()), ("turn_idx", pa.int32()), ("role", pa.string()),
+    ("text", pa.string()), ("tool", pa.string()), ("ts", pa.timestamp("us")),
+])
 
 
 @pytest.fixture(scope="session")

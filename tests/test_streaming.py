@@ -18,12 +18,8 @@ from sqlite_otel_spark.oracle import OracleDB
 from sqlite_otel_spark.plans import checkpoint as cp
 from sqlite_otel_spark.plans.pipeline import run_pipeline
 from sqlite_otel_spark.streaming import stream as st
+from tests.conftest import TRANSCRIPT_ARROW_SCHEMA as SCHEMA
 from tests.conftest import transcripts_df
-
-SCHEMA = pa.schema([
-    ("conv_id", pa.string()), ("turn_idx", pa.int32()), ("role", pa.string()),
-    ("text", pa.string()), ("tool", pa.string()), ("ts", pa.timestamp("us")),
-])
 
 
 @pytest.fixture(scope="module")
