@@ -66,7 +66,7 @@ class PipelineConfig:
     # log_records, metric_data_points, rejects) are written partitioned
     # by a derived ts_day column (days(ts) — the Iceberg transform's
     # parquet equivalent) on every path — batch, checkpoint buckets and
-    # stream appends share one writer — so time-ranged reads
+    # stream micro-batches share one writer — so time-ranged reads
     # partition-prune at the directory level; dimension sinks stay
     # unpartitioned (tiny). Off by default: the correctness surface
     # compares whole sinks.

@@ -207,7 +207,3 @@ def to_records(df: DataFrame, max_text_bytes: int = 10 * 1024 * 1024,
             F.when(F.col("rec_kind") == "turn", F.octet_length("text")),
         )
     return out
-
-
-def of_kind(records: DataFrame, kind: str) -> DataFrame:
-    return records.filter(records["rec_kind"] == kind)

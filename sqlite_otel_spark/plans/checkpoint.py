@@ -23,13 +23,13 @@ with a bucket filter before the write:
    bucket of every run is admitted against the same invalid-turn set.
 
  commit (per bucket, up to MAX_CONCURRENT_BUCKETS in flight): a filter
-   of the parsed stream -> admit -> fact_sinks + dim_touches (hash
-   surrogate ids are pure functions of natural keys, so buckets never
-   coordinate); write facts + this bucket's dimension touches through
-   the batch plan's writer (``write_tables``, leaf ``/bucket=N``, so
-   the sink layout options hold as in a batch run), counting rows with
-   observed metrics on the write itself -> append manifest row with
-   per-sink counts (the lineage record).
+   of the parsed stream -> commit_slice, the micro-batch's commit too:
+   admit -> fact_sinks + dim_touches (hash surrogate ids are pure
+   functions of natural keys, so buckets never coordinate) -> the batch
+   plan's writer (``write_tables``, leaf ``/bucket=N``, so the sink
+   layout options hold as in a batch run), counting the fact rows with
+   observed metrics on the write itself -> manifest row with per-sink
+   counts (the lineage record).
 
  finalize (idempotent): build the final dims from every bucket's
    touches with the batch plan's own builders (pipeline.read_touch_dims;
@@ -47,6 +47,7 @@ from __future__ import annotations
 import json
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -55,9 +56,8 @@ from sqlite_otel_spark.config import PipelineConfig
 from sqlite_otel_spark.operators.conflicts import resolve_span_conflicts
 from sqlite_otel_spark.plans.pipeline import (
     FACT_TABLES,
-    admit,
-    dim_touches,
-    fact_sinks,
+    commit_slice,
+    nothing_committed,
     parse_records,
     read_touch_dims,
     write_tables,
@@ -71,22 +71,6 @@ MAX_CONCURRENT_BUCKETS = 4
 
 def bucket_col(cfg: PipelineConfig):
     return F.pmod(F.xxhash64("conv_id"), F.lit(cfg.checkpoint_buckets)).cast("int")
-
-
-def _process_bucket(
-    records: DataFrame,
-    invalid_turns: DataFrame | None,
-    out_dir: str,
-    bucket: int,
-    cfg: PipelineConfig,
-) -> dict:
-    valid, rejects = admit(records, invalid_turns)
-    outputs = {**fact_sinks(valid, rejects), **dim_touches(valid)}
-    # Row counts ride the write itself as observed metrics — the
-    # commit must not rescan its own output (7 extra scans/bucket).
-    observed = {name: Observation(f"rows_{name}_b{bucket}") for name in outputs}
-    write_tables(outputs, out_dir, cfg, leaf=f"/bucket={bucket}", observe=observed)
-    return {name: obs.get["n"] for name, obs in observed.items()}
 
 
 def run_checkpointed(
@@ -141,8 +125,12 @@ def run_checkpointed(
                 json.dump(invalid, f)
 
         def do_bucket(b: int) -> int:
-            bucket_records = records.filter(bucket_col(cfg) == b)
-            counts = _process_bucket(bucket_records, invalid_df, out_dir, b, cfg)
+            # The manifest's row counts ride the write itself as observed
+            # metrics: the commit must not rescan its own output.
+            observed = {t: Observation(f"rows_{t}_b{b}") for t in FACT_TABLES}
+            commit_slice(records.filter(bucket_col(cfg) == b), invalid_df,
+                         out_dir, cfg, f"/bucket={b}", observed)
+            counts = {t: obs.get["n"] for t, obs in observed.items()}
             _write_manifest_row(spark, out_dir, b, run_id, counts)
             return b
 
@@ -185,7 +173,9 @@ def _write_manifest_row(spark, out_dir, bucket, run_id, counts) -> None:
 def read_manifest_buckets(spark, out_dir) -> set[int]:
     try:
         return {r.bucket for r in read_manifest(spark, out_dir).collect()}
-    except Exception:
+    except AnalysisException as e:
+        if not nothing_committed(e):
+            raise
         return set()
 
 

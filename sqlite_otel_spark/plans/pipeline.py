@@ -16,6 +16,8 @@ request. Batch (``run_pipeline``), checkpoint buckets
                     filter+project over the admitted stream
     dim_touches     the dimension-touch rows one input slice commits
                     (checkpoint bucket, micro-batch)
+    commit_slice    admit -> fact_sinks + dim_touches -> write_tables
+                    into the slice's own leaf
     build_dims      resources / scopes / metrics (D1-D3) from record or
                     touch rows
 
@@ -26,13 +28,15 @@ Each caller owns only its policy; all three write through
     run_pipeline    resolve_span_conflicts     persist() or   overwrite;
                     over the whole input       staging_dir    dims from the
                                                               record stream
-    checkpoint      resolve_span_conflicts     persist() once overwrite
+    checkpoint      resolve_span_conflicts     persist() once commit_slice,
                     over the whole input,      per run;       leaf
                     saved in _control/         buckets filter /bucket=N;
                                                the stream     dims at
                                                               finalize
-    stream          committed-span clashes,    persist() per  append; dims
-                    then within-batch replay   micro-batch    on read
+    stream          clashes with the spans of  persist() per  commit_slice,
+                    batches < N, then within-  micro-batch    leaf
+                    batch replay                              /batch=N;
+                                                              dims on read
 
 Batch stage map:
 
@@ -67,6 +71,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -147,7 +152,7 @@ def build_dims(
 
 def read_touch_dims(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:
     """Dimensions deduplicated from every committed touch under
-    ``out_dir`` (checkpoint buckets or stream appends): hash ids are pure
+    ``out_dir`` (checkpoint buckets or micro-batches): hash ids are pure
     functions of the natural key, so touches from independent slices
     merge without coordination."""
     return build_dims(
@@ -303,21 +308,18 @@ def write_tables(
     tables: dict[str, DataFrame],
     out_dir: str,
     cfg: PipelineConfig | None = None,
-    mode: str = "overwrite",
     leaf: str = "",
     observe: dict[str, Observation] | None = None,
 ) -> None:
     """S3/S4: the one sink writer (≙ the reference's per-request SQLite
     transaction + schema auto-init, database/db.go:53-165): each table
-    lands as a parquet directory ``{out_dir}/{name}{leaf}``, committed
-    atomically per table. Its callers:
+    overwrites the parquet directory ``{out_dir}/{name}{leaf}``,
+    committed atomically per table, in a leaf its caller owns:
 
-        write_sinks      batch run          mode="overwrite", leaf=""
-        checkpoint       one bucket         mode="overwrite",
-                                            leaf="/bucket={b}"
-                         finalize dims      mode="overwrite", leaf=""
-                                            (out_dir .../_final)
-        stream           one micro-batch    mode="append", leaf=""
+        write_sinks      batch run          leaf=""
+        commit_slice     one bucket         leaf="/bucket={b}"
+                         one micro-batch    leaf="/batch={id}"
+        finalize         checkpoint dims    leaf="" (out_dir .../_final)
 
     Layout holds on every path: ``cfg.compression``; file rotation (A4)
     with ``target_file_bytes`` deriving maxRecordsPerFile from measured
@@ -326,7 +328,7 @@ def write_tables(
     ``partition_facts_by_day``, the fact sinks partitioned by ts_day.
 
     ``observe`` (the checkpoint's manifest counts) maps table names to
-    Observations of each table's written row count. They attach after
+    Observations of the written row count. They attach after
     the rotation probe: an Observation completes on the first action
     over its DataFrame, and the probe's sample would complete it with a
     partial count.
@@ -357,10 +359,10 @@ def write_tables(
             # Iceberg days() transform the north_star names).
             df = df.withColumn("ts_day", F.to_date("ts"))
             partition_cols = ["ts_day"]
-        if observe:
+        if observe and name in observe:
             df = df.observe(observe[name], F.count(F.lit(1)).alias("n"))
         w = (
-            df.write.mode(mode)
+            df.write.mode("overwrite")
             .option("compression", cfg.compression)
             .option("maxRecordsPerFile", per_file)
         )
@@ -372,6 +374,31 @@ def write_tables(
 
     with ThreadPoolExecutor(max_workers=len(tables)) as pool:
         list(pool.map(write_one, tables.items()))
+
+
+def commit_slice(
+    records: DataFrame,
+    invalid_turns: DataFrame | None,
+    out_dir: str,
+    cfg: PipelineConfig,
+    leaf: str,
+    observe: dict[str, Observation] | None = None,
+) -> None:
+    """Commit one input slice (a checkpoint bucket, a micro-batch) into
+    the leaf the caller owns: a replay of the slice overwrites whatever
+    a failed attempt left there."""
+    valid, rejects = admit(records, invalid_turns)
+    write_tables(
+        {**fact_sinks(valid, rejects), **dim_touches(valid)},
+        out_dir, cfg, leaf=leaf, observe=observe,
+    )
+
+
+def nothing_committed(e: AnalysisException) -> bool:
+    """True when reading a sink failed because no file is committed
+    there yet: the directory is missing, or a crashed first write left
+    only its ``_temporary`` directory. Any other read error is real."""
+    return e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 
 
 def write_sinks(result: PipelineResult, out_dir: str, cfg: PipelineConfig | None = None) -> None:

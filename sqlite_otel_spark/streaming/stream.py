@@ -7,20 +7,23 @@ micro-batch to one ``foreachBatch`` invocation:
 
     readStream(file source over the transcripts table)
       -> foreachBatch: the shared stages of plans/pipeline.py —
-         parse_records -> admit -> fact_sinks + dim_touches — where the
-         conflict verdicts cover the batch itself AND previously
-         committed spans (the cross-batch persistent state the reference
-         keeps in SQLite's unique indexes) -> append facts + dim touches
-         through the batch plan's writer (``write_tables``,
-         mode="append"), so codec, file rotation and the day
-         partitioning of the fact sinks match a batch run
+         parse_records -> verdicts over the batch AND the spans earlier
+         batches committed (the cross-batch state the reference keeps in
+         SQLite's unique indexes) -> commit_slice into the batch's own
+         leaf ``{table}/batch={batch_id}``, through the batch plan's
+         writer, so the sink layout options match a batch run
+
+The batch id keys the commit, as the bucket number does for the
+checkpoint: a batch that Spark re-runs after a crash reads only the
+spans of batches < id, so it reaches the first attempt's verdicts, and
+it overwrites its own partial output.
 
 Cross-batch state design: instead of flatMapGroupsWithState (explicitly
 avoided, SURVEY §7e), committed span PKs are re-read from the sink and
 anti-joined — the parquet stand-in for an Iceberg MERGE. Dimension
-tables are append+dedup-on-read (``read_dims``, the batch plan's own
-dimension builders over the touches), matching the get-or-create
-semantics without a transactional catalog.
+tables are touches deduplicated on read (``read_dims``, the batch plan's
+own dimension builders), matching the get-or-create semantics without a
+transactional catalog.
 
 Watermarking: the reference has NO late-data policy (rows stored in
 arrival order, database/db.go:86-87); ``windowed_counts`` demonstrates
@@ -31,18 +34,17 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sqlite_otel_spark.config import PipelineConfig
 from sqlite_otel_spark.operators.conflicts import drop_conflicted, resolve_span_conflicts
 from sqlite_otel_spark.plans.pipeline import (
-    admit,
-    dim_touches,
-    fact_sinks,
+    commit_slice,
+    nothing_committed,
     parse_records,
     read_touch_dims,
-    write_tables,
 )
 
 TRANSCRIPT_DDL = (
@@ -50,13 +52,20 @@ TRANSCRIPT_DDL = (
 )
 
 
-def _clash_turns(spark: SparkSession, records: DataFrame, out_dir: str) -> DataFrame | None:
+def _clash_turns(
+    spark: SparkSession, records: DataFrame, out_dir: str, batch_id: int
+) -> DataFrame | None:
     """Turns of this batch whose spans collide with spans committed by
-    earlier batches, or None when there are none."""
+    earlier batches, or None when there are none. Only the leaves of
+    batches < ``batch_id`` count (a partition filter): a replay must not
+    see the spans its own failed attempt committed."""
     try:
-        committed = spark.read.parquet(f"{out_dir}/spans").select("trace_id", "span_id")
-    except Exception:
+        committed = spark.read.parquet(f"{out_dir}/spans")
+    except AnalysisException as e:
+        if not nothing_committed(e):
+            raise
         return None  # first batch: nothing committed yet
+    committed = committed.filter(F.col("batch") < batch_id).select("trace_id", "span_id")
     clash = (
         records.filter(F.col("rec_kind") == "span")
         .join(committed, ["trace_id", "span_id"], "leftsemi")
@@ -79,17 +88,13 @@ def process_batch(
         # with them always rolls back; the within-batch replay then
         # runs over the remaining turns only (a rolled-back turn frees
         # its other keys for later turns, as in the cascade).
-        clash = _clash_turns(spark, records, out_dir)
+        clash = _clash_turns(spark, records, out_dir, batch_id)
         invalid_turns, _ = resolve_span_conflicts(
             spark, drop_conflicted(records, clash), cfg.max_conflict_turns
         )
         if clash is not None:
             invalid_turns = clash if invalid_turns is None else clash.unionByName(invalid_turns)
-        valid, rejects = admit(records, invalid_turns)
-        write_tables(
-            {**fact_sinks(valid, rejects), **dim_touches(valid)},
-            out_dir, cfg, mode="append",
-        )
+        commit_slice(records, invalid_turns, out_dir, cfg, f"/batch={batch_id}")
     finally:
         records.unpersist()
 
@@ -99,8 +104,11 @@ def start_stream(
     cfg: PipelineConfig | None = None, checkpoint_dir: str | None = None,
 ):
     """File-source stream with availableNow trigger (bounded catch-up run,
-    ≙ draining the request backlog); exactly-once per micro-batch via the
-    streaming checkpoint + idempotent appends."""
+    ≙ draining the request backlog). Each micro-batch overwrites its own
+    leaf ``{table}/batch={batch_id}``, so a batch that Spark re-runs from
+    the streaming checkpoint after a crash replaces its partial output.
+    Keep ``out_dir`` with its checkpoint: batch ids restart at 0 under a
+    new one."""
     cfg = cfg or PipelineConfig()
     os.makedirs(out_dir, exist_ok=True)
     reader = spark.readStream.schema(TRANSCRIPT_DDL)
@@ -122,7 +130,7 @@ def start_stream(
 
 
 def read_dims(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:
-    """Dedup-on-read dimension views over the appended touches."""
+    """Dedup-on-read dimension views over every batch's touches."""
     return read_touch_dims(spark, out_dir)
 
 

@@ -24,3 +24,11 @@ def spark():
 
 def transcripts_df(spark, rows):
     return spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA)
+
+
+def sorted_rows(df):
+    """Every row of a sink as a repr, over its columns in name order and
+    without the checkpoint's ``bucket`` and the stream's ``batch``
+    partition columns (repr keeps NaN and None comparable)."""
+    cols = sorted(c for c in df.columns if c not in ("bucket", "batch"))
+    return sorted(repr(tuple(r)) for r in df.select(*cols).collect())

@@ -151,7 +151,7 @@ def _write_streamed(spark, rows, out, cfg):
 @pytest.mark.parametrize("write", [_write_batch, _write_checkpointed, _write_streamed],
                          ids=["batch", "checkpoint", "stream"])
 def test_layout_holds_on_every_path(spark, tmp_path, write):
-    """Batch, checkpoint buckets and stream appends share one writer, so
+    """Batch, checkpoint buckets and stream micro-batches share one writer, so
     the sink layout options hold whichever way the run executes: the
     fact sinks land day-partitioned, the file cap bounds every spans
     file, and the sinks read back with the sequential oracle's counts."""

@@ -6,6 +6,7 @@ compositions of the same stages persist, plus a watermarked windowed
 aggregate."""
 
 import os
+import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -19,7 +20,7 @@ from sqlite_otel_spark.plans import checkpoint as cp
 from sqlite_otel_spark.plans.pipeline import run_pipeline
 from sqlite_otel_spark.streaming import stream as st
 from tests.conftest import TRANSCRIPT_ARROW_SCHEMA as SCHEMA
-from tests.conftest import transcripts_df
+from tests.conftest import sorted_rows, transcripts_df
 
 
 @pytest.fixture(scope="module")
@@ -66,36 +67,36 @@ def test_stream_matches_oracle(spark, stream_dirs, streamed):
     assert got == set(oracle.spans)
 
 
-def _sorted_rows(df):
-    """Every row of a sink as a repr, over its columns in name order
-    (repr keeps NaN and None comparable)."""
-    cols = sorted(c for c in df.columns if c != "bucket")
-    return sorted(repr(tuple(r)) for r in df.select(*cols).collect())
+def _read_all(spark, out_dir):
+    """The stream's seven tables: facts from their batch leaves, dims
+    deduplicated on read."""
+    sinks = {t: spark.read.parquet(f"{out_dir}/{t}") for t in cp.FACT_TABLES}
+    sinks.update(st.read_dims(spark, out_dir))
+    return sinks
 
 
 def test_batch_checkpoint_stream_parity(spark, stream_dirs, streamed, tmp_path):
     """Batch ``run_pipeline`` (hash ids), ``run_checkpointed`` over 4
     buckets and the micro-batch stream compose the same stages, so all
     seven tables must match row for row — dimension ids and natural
-    keys included — after dropping the checkpoint's bucket column."""
+    keys included — after dropping the checkpoint's bucket and the
+    stream's batch column."""
     rows, _, _ = stream_dirs
     df = transcripts_df(spark, rows)
     batch = run_pipeline(spark, df, PipelineConfig())
     try:
-        want = {name: _sorted_rows(t) for name, t in batch.sinks.items()}
+        want = {name: sorted_rows(t) for name, t in batch.sinks.items()}
     finally:
         batch.unpersist()
     assert all(want.values())  # every table has rows to compare
 
     ckpt_dir = str(tmp_path / "ckpt")
     cp.run_checkpointed(spark, df, ckpt_dir, PipelineConfig(checkpoint_buckets=4))
-    stream_sinks = {t: spark.read.parquet(f"{streamed}/{t}") for t in cp.FACT_TABLES}
-    stream_sinks.update(st.read_dims(spark, streamed))
     for path, sinks in (("checkpoint", cp.read_sinks(spark, ckpt_dir)),
-                        ("stream", stream_sinks)):
+                        ("stream", _read_all(spark, streamed))):
         assert set(sinks) == set(want), path
         for name, t in sinks.items():
-            assert _sorted_rows(t) == want[name], (path, name)
+            assert sorted_rows(t) == want[name], (path, name)
 
 
 def test_cross_batch_cascade_is_sequential(spark, tmp_path):
@@ -125,6 +126,90 @@ def test_cross_batch_cascade_is_sequential(spark, tmp_path):
                 for r in spark.read.parquet(f"{out_dir}/rejects").collect()}
     assert rejected == {(r["conv_id"], r["turn_idx"]) for r in oracle.rejects}
     assert rejected == {("conv-cascade-b", 0)}
+
+
+def test_replay_after_partial_commit(spark, stream_dirs, streamed, tmp_path, monkeypatch):
+    """A crash inside batch 1's commit, after six of its seven tables
+    landed, then a restart on the same streaming checkpoint: Spark
+    re-runs batch 1, whose replay must overwrite its partial output and
+    take its verdicts from the earlier batches only. All seven tables
+    then equal an uninterrupted drain row for row, and the oracle."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    rows, src_dir, _ = stream_dirs
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    for i, name in enumerate(sorted(os.listdir(src_dir))):
+        path = str(in_dir / name)
+        shutil.copyfile(os.path.join(src_dir, name), path)
+        os.utime(path, (1_000_000 + i, 1_000_000 + i))  # admitted by mtime
+    out_dir = str(tmp_path / "out")
+
+    attempts, armed, landed = [], [False], []
+    real_process_batch, real_parquet = st.process_batch, DataFrameWriter.parquet
+
+    def process_batch(spark_, df, batch_id, *args):
+        attempts.append(batch_id)
+        armed[0] = attempts == [0, 1]  # batch 1's first attempt only
+        try:
+            real_process_batch(spark_, df, batch_id, *args)
+        finally:
+            armed[0] = False
+
+    def parquet(self, path, *args, **kwargs):
+        table = os.path.relpath(path, out_dir).split(os.sep)[0]
+        if armed[0] and table == "rejects":
+            raise RuntimeError("injected crash before rejects commits")
+        real_parquet(self, path, *args, **kwargs)
+        if armed[0]:
+            landed.append(table)
+
+    monkeypatch.setattr(st, "process_batch", process_batch)
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+
+    def drain():
+        q = st.start_stream(spark, str(in_dir), out_dir, PipelineConfig(),
+                            checkpoint_dir=str(tmp_path / "ckpt"))
+        return q.awaitTermination(300)
+
+    with pytest.raises(StreamingQueryException):
+        drain()
+    assert len(landed) == 6  # batch 1 partially committed
+    assert drain()
+    assert attempts == [0, 1, 1, 2]
+
+    got = _read_all(spark, out_dir)
+    assert ({t: df.count() for t, df in got.items()}
+            == OracleDB().run(rows).sink_counts())
+    want = _read_all(spark, streamed)
+    for name, df in got.items():
+        assert sorted_rows(df) == sorted_rows(want[name]), name
+
+
+def test_clash_probe_fails_loudly(spark, stream_dirs, tmp_path):
+    """Only "nothing committed yet" reads as an empty history: a missing
+    spans directory, or one holding just a crashed first write's
+    ``_temporary``. A corrupt spans file raises instead of admitting
+    spans that may clash; a corrupt manifest file likewise."""
+    from sqlite_otel_spark.plans.pipeline import parse_records
+
+    rows, _, _ = stream_dirs
+    records = parse_records(transcripts_df(spark, rows[:20]), PipelineConfig())
+    out = tmp_path / "out"
+    assert st._clash_turns(spark, records, str(out), 1) is None
+    (out / "spans" / "batch=0" / "_temporary").mkdir(parents=True)
+    assert st._clash_turns(spark, records, str(out), 1) is None
+
+    bad = tmp_path / "bad"
+    for leaf in ("spans/batch=0", "_manifest/bucket_0"):
+        (bad / leaf).mkdir(parents=True)
+        (bad / leaf / "part-0.parquet").write_text("not a parquet file\n" * 8)
+    with pytest.raises(Exception, match="not a Parquet file"):
+        st._clash_turns(spark, records, str(bad), 1)
+    assert cp.read_manifest_buckets(spark, str(out)) == set()
+    with pytest.raises(Exception, match="not a Parquet file"):
+        cp.read_manifest_buckets(spark, str(bad))
 
 
 def test_max_bytes_per_trigger_admission(spark, stream_dirs, tmp_path):
