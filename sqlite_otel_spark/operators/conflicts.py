@@ -21,6 +21,11 @@ Exceeding the cap means the input is adversarial and the job fails
 loudly (before any oversized group materializes on an executor or any
 wide row reaches the driver) rather than OOMing.
 
+Keys committed before the input (``history``: a micro-batch's earlier
+batches, as SQLite's index holds earlier requests' spans) count as
+committed before any turn, so a turn colliding with one rolls back and
+frees its other keys; the cap counts those history rows too.
+
 Canonical arrival order is (conv_id, turn_idx) — the graft's stable
 ordering invariant (BASELINE.json input_hint).
 """
@@ -38,7 +43,8 @@ class ConflictOverflowError(RuntimeError):
 
 
 def resolve_span_conflicts(
-    spark: SparkSession, records: DataFrame, max_conflict_turns: int = 100_000
+    spark: SparkSession, records: DataFrame, max_conflict_turns: int = 100_000,
+    history: DataFrame | None = None,
 ) -> tuple[DataFrame | None, int]:
     """Return (invalid_turns_df | None, n_invalid) — turns rejected by the
     cross-turn spans PK cascade. ``records`` is the flat record stream
@@ -46,10 +52,18 @@ def resolve_span_conflicts(
     are transparently excluded. Two jobs over the pruned
     (conv_id, turn_idx, trace_id, span_id) projection: a counts-only agg
     that enforces the cap, then a bounded semi-join collect (the dup set
-    is near-empty in sane inputs)."""
+    is near-empty in sane inputs). The ``history`` keys ``records``
+    carries join both passes as rows of no turn, flagged ``in_history``
+    (``conv_id`` is nullable, so a null one marks nothing)."""
     span_keys = records.filter(F.col("rec_kind") == "span").select(
         "conv_id", "turn_idx", "trace_id", "span_id"
     )
+    if history is not None:
+        keys = ["trace_id", "span_id"]
+        seen = history.select(*keys).join(span_keys.select(*keys), keys, "leftsemi")
+        span_keys = span_keys.withColumn("in_history", F.lit(False)).unionByName(
+            seen.withColumn("in_history", F.lit(True)), allowMissingColumns=True
+        )
     # Pass 1 — duplicated keys via ONE partial+final count agg, fetched
     # with a LIMIT of cap+1 rows: the adversarial-input guard fires
     # BEFORE any per-key list materializes on an executor or any wide
@@ -120,13 +134,16 @@ def resolve_span_conflicts(
         r for r in probe.collect() if (r.trace_id, r.span_id) in dup_set
     ]
 
-    # Sequential replay in canonical arrival order.
+    # Sequential replay in canonical arrival order, history first.
     by_turn: dict[tuple, list[tuple]] = {}
+    committed: set[tuple] = set()
     for r in pair_rows:
+        if history is not None and r.in_history:
+            committed.add((r.trace_id, r.span_id))
+            continue
         by_turn.setdefault((r.conv_id, r.turn_idx), []).append(
             (r.trace_id, r.span_id)
         )
-    committed: set[tuple] = set()
     invalid: list[tuple] = []
     for turn in sorted(by_turn):
         keys = by_turn[turn]

@@ -33,10 +33,10 @@ Each caller owns only its policy; all three write through
                     saved in _control/         buckets filter /bucket=N;
                                                the stream     dims at
                                                               finalize
-    stream          clashes with the spans of  persist() per  commit_slice,
-                    batches < N, then within-  micro-batch    leaf
-                    batch replay                              /batch=N;
-                                                              dims on read
+    stream          resolve_span_conflicts     persist() per  commit_slice,
+                    over the micro-batch, the  micro-batch    leaf
+                    spans of batches < N as                   /batch=N;
+                    its history                               dims on read
 
 Batch stage map:
 

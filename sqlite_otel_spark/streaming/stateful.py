@@ -4,7 +4,7 @@
 The reference keeps its cross-request dedup state in SQLite unique
 indexes (database/shared.go:25-163, db.go:153-155): a span PK seen in an
 earlier request silently wins over later arrivals. The foreachBatch
-variant (streaming/stream.py) reproduces that by anti-joining the sink —
+variant (streaming/stream.py) resolves against the sink's committed spans —
 O(committed) re-read per micro-batch. This module is the in-stream
 alternative: dedup state lives IN the streaming state store, keyed by
 the span PK itself, so each micro-batch touches only the keys it

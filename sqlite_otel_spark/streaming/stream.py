@@ -7,11 +7,11 @@ micro-batch to one ``foreachBatch`` invocation:
 
     readStream(file source over the transcripts table)
       -> foreachBatch: the shared stages of plans/pipeline.py —
-         parse_records -> verdicts over the batch AND the spans earlier
-         batches committed (the cross-batch state the reference keeps in
-         SQLite's unique indexes) -> commit_slice into the batch's own
-         leaf ``{table}/batch={batch_id}``, through the batch plan's
-         writer, so the sink layout options match a batch run
+         parse_records -> resolve_span_conflicts with the spans earlier
+         batches committed as history (the cross-batch state the
+         reference keeps in SQLite's unique indexes) -> commit_slice
+         into the batch's own leaf ``{table}/batch={batch_id}``, through
+         the batch plan's writer, so the sink layout matches a batch run
 
 The batch id keys the commit, as the bucket number does for the
 checkpoint: a batch that Spark re-runs after a crash reads only the
@@ -19,8 +19,8 @@ spans of batches < id, so it reaches the first attempt's verdicts, and
 it overwrites its own partial output.
 
 Cross-batch state design: instead of flatMapGroupsWithState (explicitly
-avoided, SURVEY §7e), committed span PKs are re-read from the sink and
-anti-joined — the parquet stand-in for an Iceberg MERGE. Dimension
+avoided, SURVEY §7e), committed span PKs are re-read from the sink as
+the history of the resolver batch and checkpoint use. Dimension
 tables are touches deduplicated on read (``read_dims``, the batch plan's
 own dimension builders), matching the get-or-create semantics without a
 transactional catalog.
@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sqlite_otel_spark.config import PipelineConfig
-from sqlite_otel_spark.operators.conflicts import drop_conflicted, resolve_span_conflicts
+from sqlite_otel_spark.operators.conflicts import resolve_span_conflicts
 from sqlite_otel_spark.plans.pipeline import (
     commit_slice,
     nothing_committed,
@@ -52,29 +52,18 @@ TRANSCRIPT_DDL = (
 )
 
 
-def _clash_turns(
-    spark: SparkSession, records: DataFrame, out_dir: str, batch_id: int
-) -> DataFrame | None:
-    """Turns of this batch whose spans collide with spans committed by
-    earlier batches, or None when there are none. Only the leaves of
-    batches < ``batch_id`` count (a partition filter): a replay must not
-    see the spans its own failed attempt committed."""
+def _span_history(spark: SparkSession, out_dir: str, batch_id: int) -> DataFrame | None:
+    """The span keys earlier batches committed, or None when nothing is
+    committed yet. Only the leaves of batches < ``batch_id`` count (a
+    partition filter): a replay must not see the spans its own failed
+    attempt committed."""
     try:
         committed = spark.read.parquet(f"{out_dir}/spans")
     except AnalysisException as e:
         if not nothing_committed(e):
             raise
-        return None  # first batch: nothing committed yet
-    committed = committed.filter(F.col("batch") < batch_id).select("trace_id", "span_id")
-    clash = (
-        records.filter(F.col("rec_kind") == "span")
-        .join(committed, ["trace_id", "span_id"], "leftsemi")
-        .select("conv_id", "turn_idx").distinct()
-    )
-    # a plain count, not limit(1).count(): every plan with a limit gets a
-    # fresh JVM-wide counter name in its generated code, so the probe
-    # would compile new classes on every micro-batch
-    return clash if clash.count() > 0 else None
+        return None
+    return committed.filter(F.col("batch") < batch_id).select("trace_id", "span_id")
 
 
 def process_batch(
@@ -83,17 +72,10 @@ def process_batch(
 ) -> None:
     records = parse_records(batch_df, cfg).persist()
     try:
-        # Verdicts in sequential-commit order: earlier batches' spans
-        # committed before any turn of this one, so a turn colliding
-        # with them always rolls back; the within-batch replay then
-        # runs over the remaining turns only (a rolled-back turn frees
-        # its other keys for later turns, as in the cascade).
-        clash = _clash_turns(spark, records, out_dir, batch_id)
         invalid_turns, _ = resolve_span_conflicts(
-            spark, drop_conflicted(records, clash), cfg.max_conflict_turns
+            spark, records, cfg.max_conflict_turns,
+            history=_span_history(spark, out_dir, batch_id),
         )
-        if clash is not None:
-            invalid_turns = clash if invalid_turns is None else clash.unionByName(invalid_turns)
         commit_slice(records, invalid_turns, out_dir, cfg, f"/batch={batch_id}")
     finally:
         records.unpersist()

@@ -92,6 +92,79 @@ def test_locally_failed_turns_excluded(spark):
     assert invalid is None and n == 0
 
 
+def key_frame(spark, keys):
+    return spark.createDataFrame(keys, schema="trace_id string, span_id string")
+
+
+def verdicts(invalid):
+    return sorted((r.conv_id, r.turn_idx) for r in invalid.collect())
+
+
+def test_history_key_rolls_back_the_turn_that_carries_it(spark):
+    # the docstring cascade with A's X committed by an earlier batch:
+    # B (X, Y) rolls back and frees Y, so C (Y) commits
+    recs = span_records(
+        spark,
+        [("c1", 1, "tX", "sX"), ("c1", 1, "tY", "sY"), ("c1", 2, "tY", "sY")],
+    )
+    invalid, n = resolve_span_conflicts(
+        spark, recs, 100, history=key_frame(spark, [("tX", "sX")])
+    )
+    assert n == 1
+    assert verdicts(invalid) == [("c1", 1)]
+
+
+def test_history_key_the_input_lacks_changes_nothing(spark):
+    history = key_frame(spark, [("tZ", "sZ")])
+    fresh = span_records(spark, [("c1", 0, "t1", "s1"), ("c1", 1, "t2", "s2")])
+    assert resolve_span_conflicts(spark, fresh, 100, history=history) == (None, 0)
+    cascade = span_records(
+        spark,
+        [
+            ("c1", 0, "tX", "sX"),
+            ("c1", 1, "tX", "sX"),
+            ("c1", 1, "tY", "sY"),
+            ("c1", 2, "tY", "sY"),
+        ],
+    )
+    invalid, n = resolve_span_conflicts(spark, cascade, 100, history=history)
+    assert n == 1 and verdicts(invalid) == [("c1", 1)]
+
+
+def test_history_rows_are_never_verdicts(spark):
+    # every history key the input carries is a duplicated key, yet only
+    # the input's turns come back
+    recs = span_records(
+        spark, [("c1", 0, "tX", "sX"), ("c2", 0, "tY", "sY"), ("c3", 0, "t3", "s3")]
+    )
+    history = key_frame(spark, [("tX", "sX"), ("tY", "sY"), ("tZ", "sZ")])
+    invalid, n = resolve_span_conflicts(spark, recs, 100, history=history)
+    assert n == 2
+    assert verdicts(invalid) == [("c1", 0), ("c2", 0)]
+
+
+def test_null_conv_id_turn_is_not_history(spark):
+    # conv_id is nullable: a turn without one still rolls back when it
+    # collides with history, and does not commit X in history's stead
+    recs = span_records(spark, [(None, 0, "tX", "sX"), (None, 0, "tW", "sW")])
+    invalid, n = resolve_span_conflicts(
+        spark, recs, 100, history=key_frame(spark, [("tX", "sX")])
+    )
+    assert n == 1
+    assert verdicts(invalid) == [(None, 0)]
+
+
+def test_history_pairs_count_toward_the_cap(spark):
+    # one input turn per history key: two pairs per key, as in a batch
+    # run that holds both copies
+    recs = span_records(spark, [(f"c{i}", 0, f"t{i}", "s") for i in range(6)])
+    history = key_frame(spark, [(f"t{i}", "s") for i in range(6)])
+    with pytest.raises(ConflictOverflowError):
+        resolve_span_conflicts(spark, recs, 10, history=history)
+    invalid, n = resolve_span_conflicts(spark, recs, 12, history=history)
+    assert n == 6
+
+
 def test_checkpoint_overflow_is_the_batch_guard(spark, tmp_path):
     # the checkpoint's verdicts come from resolve_span_conflicts, so the
     # cascade fixture's one conflict trips its guard at cap 0 before any

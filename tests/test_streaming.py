@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from sqlite_otel_spark.config import PipelineConfig
 from sqlite_otel_spark.fixtures import make_transcripts
+from sqlite_otel_spark.operators.conflicts import ConflictOverflowError
 from sqlite_otel_spark.oracle import OracleDB
 from sqlite_otel_spark.plans import checkpoint as cp
 from sqlite_otel_spark.plans.pipeline import run_pipeline
@@ -187,29 +188,86 @@ def test_replay_after_partial_commit(spark, stream_dirs, streamed, tmp_path, mon
         assert sorted_rows(df) == sorted_rows(want[name]), name
 
 
-def test_clash_probe_fails_loudly(spark, stream_dirs, tmp_path):
-    """Only "nothing committed yet" reads as an empty history: a missing
-    spans directory, or one holding just a crashed first write's
+def test_clash_probe_fails_loudly(spark, tmp_path):
+    """The span history a micro-batch resolves against reads as empty
+    (None) only when nothing is committed yet: a missing spans
+    directory, or one holding just a crashed first write's
     ``_temporary``. A corrupt spans file raises instead of admitting
     spans that may clash; a corrupt manifest file likewise."""
-    from sqlite_otel_spark.plans.pipeline import parse_records
-
-    rows, _, _ = stream_dirs
-    records = parse_records(transcripts_df(spark, rows[:20]), PipelineConfig())
     out = tmp_path / "out"
-    assert st._clash_turns(spark, records, str(out), 1) is None
+    assert st._span_history(spark, str(out), 1) is None
     (out / "spans" / "batch=0" / "_temporary").mkdir(parents=True)
-    assert st._clash_turns(spark, records, str(out), 1) is None
+    assert st._span_history(spark, str(out), 1) is None
 
     bad = tmp_path / "bad"
     for leaf in ("spans/batch=0", "_manifest/bucket_0"):
         (bad / leaf).mkdir(parents=True)
         (bad / leaf / "part-0.parquet").write_text("not a parquet file\n" * 8)
     with pytest.raises(Exception, match="not a Parquet file"):
-        st._clash_turns(spark, records, str(bad), 1)
+        st._span_history(spark, str(bad), 1)
     assert cp.read_manifest_buckets(spark, str(out)) == set()
     with pytest.raises(Exception, match="not a Parquet file"):
         cp.read_manifest_buckets(spark, str(bad))
+
+
+def test_clashing_batch_writes_read_no_history(spark, stream_dirs, tmp_path, monkeypatch):
+    """A micro-batch that replays committed rows (an exporter retrying
+    its requests): the history feeds the verdicts only, so no sink
+    write's executed plan scans ``{out_dir}/spans``, and the batch
+    commits what a sequential run of both copies adds."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    rows, _, _ = stream_dirs
+    df = transcripts_df(spark, rows)
+    out_dir = str(tmp_path / "out")
+    st.process_batch(spark, df, 0, out_dir, PipelineConfig())
+
+    plans, real_parquet = [], DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    # scan nodes print their full paths, not the 100-character default
+    spark.conf.set("spark.sql.maxMetadataStringLength", "100000")
+    try:
+        st.process_batch(spark, df, 1, out_dir, PipelineConfig())
+    finally:
+        spark.conf.unset("spark.sql.maxMetadataStringLength")
+    monkeypatch.undo()
+    assert len(plans) == 7
+    assert [p for p in plans if f"{out_dir}/spans" in p] == []
+
+    oracle = OracleDB().run(rows)
+    first, n_rejects = oracle.sink_counts(), len(oracle.rejects)
+    second = oracle.run(rows).sink_counts()
+    got = {t: spark.read.parquet(f"{out_dir}/{t}/batch=1").count() for t in cp.FACT_TABLES}
+    assert got == {t: second[t] - first[t] for t in cp.FACT_TABLES}
+    assert got["spans"] == 0
+    rejected = {(r.conv_id, r.turn_idx)
+                for r in spark.read.parquet(f"{out_dir}/rejects/batch=1").collect()}
+    assert rejected == {(r["conv_id"], r["turn_idx"]) for r in oracle.rejects[n_rejects:]}
+
+
+def test_replayed_batch_history_counts_toward_the_cap(spark, tmp_path):
+    """The cap bounds the pairs that collide with history, as a batch
+    run over both copies would: rows with no duplicated span commit as
+    batch 0 under a cap of their span count, and their replay as batch
+    1 (two pairs per span) overflows and commits nothing."""
+    rows = make_transcripts(40, seed=5, include_edges=False)
+    oracle = OracleDB().run(rows)
+    assert "spans PK violation" not in {r["reason"] for r in oracle.rejects}
+    n_spans = oracle.sink_counts()["spans"]
+    assert n_spans > 0
+    cfg = PipelineConfig(max_conflict_turns=n_spans)
+    df = transcripts_df(spark, rows)
+    out_dir = tmp_path / "out"
+    st.process_batch(spark, df, 0, str(out_dir), cfg)
+    assert spark.read.parquet(str(out_dir / "spans")).count() == n_spans
+    with pytest.raises(ConflictOverflowError):
+        st.process_batch(spark, df, 1, str(out_dir), cfg)
+    assert list(out_dir.glob("*/batch=1")) == []
 
 
 def test_max_bytes_per_trigger_admission(spark, stream_dirs, tmp_path):
