@@ -23,7 +23,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sqlite_otel_spark.queries import ORACLES, QUERIES, _pipeline
+from sqlite_otel_spark.queries import ORACLES, QUERIES, aggregate_view
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -33,7 +33,7 @@ def entry(spark: SparkSession) -> DataFrame:
     ``s6_health_check`` only proves the session schedules a job and
     checks the static source schema; source reachability is exercised
     by the queries that read ``sf_dir``."""
-    return _pipeline(spark).by_time_bucket
+    return aggregate_view(spark, "by_time_bucket")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

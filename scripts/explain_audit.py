@@ -38,6 +38,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from sqlite_otel_spark.config import PipelineConfig
+    from sqlite_otel_spark.operators import aggregates as agg
     from sqlite_otel_spark.plans.pipeline import run_pipeline
     from sqlite_otel_spark.queries import QUERIES, fixture_transcripts
     from sqlite_otel_spark.session import get_spark
@@ -120,11 +121,13 @@ def main() -> None:
              "the broadcast ANTI join dropping spans-PK-conflicted turns",
     )
     audit(
-        "pipeline_by_signal_tool", res.by_signal_tool,
+        "pipeline_fine_aggregate",
+        agg.fine_aggregate(res.routed, res.sinks["rejects"]),
         want=["BroadcastHashJoin", "HashAggregate", "LocalTableScan"],
         max_exchanges=2,
-        note="broadcast role/tool enrichment over JVM local relations "
-             "(no Python scan) + one shuffle for the final agg",
+        note="A1-A3's one aggregate: broadcast role/tool enrichment over "
+             "JVM local relations (no Python scan) + one shuffle per final "
+             "agg (routed fine rollup, rejects)",
     )
     res.unpersist()
 

@@ -6,6 +6,10 @@ counts (the correctness oracle, DOCKER.md:296-298), size-triggered
 rotation and top-K/age-based backup retention (logging/rotation.go).
 BASELINE.json promotes these to first-class per-sink aggregates; all are
 built-in hash aggregations (partial + final automatically) — no UDAFs.
+
+A1, A2 by tool and A3 have ONE definition: ``fine_aggregate`` at the
+finest grain, and ``fold_aggregates`` over its collected rows, which
+``collect_aggregates`` and the pipeline query views read.
 """
 
 from __future__ import annotations
@@ -14,20 +18,52 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def request_accounting(routed: DataFrame, rejects: DataFrame) -> DataFrame:
-    """A1: per-signal accepted/rejected counts + byte volume (the
-    handler's Debug/Info accounting, handler_common.go:55-64)."""
-    acc = routed.groupBy("signal_type").agg(
-        F.count(F.lit(1)).alias("accepted"),
-        F.sum("n_bytes").alias("accepted_bytes"),
+def fine_aggregate(routed: DataFrame, rejects: DataFrame) -> DataFrame:
+    """A1-A3 at their finest grain: accepted turns per (1-hour window
+    start ``bucket_start``, signal_type, tool) with count ``n`` and byte
+    sum ``n_bytes``, plus the rejects per signal_type (``reject`` true).
+    One hash aggregate per side: a GROUPING SETS form expanded every
+    turn row 3x (round 6, guide §2.3)."""
+    fine = routed.groupBy(
+        F.window("ts", "1 hour")["start"].alias("bucket_start"),
+        "signal_type", "tool",
+    ).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("n_bytes").alias("n_bytes"),
+        F.lit(False).alias("reject"),
     )
     rej = rejects.groupBy("signal_type").agg(
-        F.count(F.lit(1)).alias("rejected"),
-        F.sum("n_bytes").alias("rejected_bytes"),
+        F.count(F.lit(1)).alias("n"),
+        F.sum("n_bytes").alias("n_bytes"),
+        F.lit(True).alias("reject"),
     )
-    return acc.join(rej, "signal_type", "full").na.fill(
-        0, ["accepted", "accepted_bytes", "rejected", "rejected_bytes"]
-    )
+    return fine.unionByName(rej, allowMissingColumns=True)
+
+
+def fold_aggregates(rows) -> dict[str, list]:
+    """The collected ``fine_aggregate`` rows folded on the driver into
+    ``accounting`` (signal_type, accepted, accepted_bytes, rejected,
+    rejected_bytes), ``by_signal_tool`` (signal_type, tool, n_turns) and
+    ``by_time_bucket`` (bucket_start, signal_type, tool, n_turns);
+    counts and int64 byte sums fold associatively."""
+    acc: dict = {}
+    by_tool: dict = {}
+    by_bucket = []
+    for r in rows:
+        a = acc.setdefault(r.signal_type, [r.signal_type, 0, 0, 0, 0])
+        if r.reject:
+            a[3:5] = [r.n, r.n_bytes or 0]
+            continue
+        a[1] += r.n
+        a[2] += r.n_bytes or 0
+        key = (r.signal_type, r.tool)
+        by_tool[key] = by_tool.get(key, 0) + r.n
+        by_bucket.append((r.bucket_start, r.signal_type, r.tool, r.n))
+    return {
+        "accounting": [tuple(v) for v in acc.values()],
+        "by_signal_tool": [(s, t, n) for (s, t), n in by_tool.items()],
+        "by_time_bucket": by_bucket,
+    }
 
 
 def sink_counts(sinks: dict[str, DataFrame]) -> dict[str, int]:
@@ -46,25 +82,6 @@ def sink_counts(sinks: dict[str, DataFrame]) -> dict[str, int]:
     )
     got = {r["sink"]: r["count"] for r in tagged.groupBy("sink").count().collect()}
     return {name: got.get(name, 0) for name in sinks}
-
-
-def counts_by_signal_tool(routed: DataFrame) -> DataFrame:
-    """A2 by tool: groupBy(signal_type, tool).count()."""
-    return routed.groupBy("signal_type", "tool").agg(F.count(F.lit(1)).alias("n_turns"))
-
-
-def counts_by_time_bucket(routed: DataFrame, bucket: str = "1 hour") -> DataFrame:
-    """A3: tumbling-window counts by signal and tool on the transcript
-    timestamp (north_star: 'counts by signal type, tool, time bucket via
-    window on ts')."""
-    return (
-        routed.groupBy(F.window("ts", bucket).alias("w"), "signal_type", "tool")
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .select(
-            F.col("w.start").alias("bucket_start"),
-            "signal_type", "tool", "n_turns",
-        )
-    )
 
 
 def session_counts(df: DataFrame, key: str, ts_col: str = "ts",

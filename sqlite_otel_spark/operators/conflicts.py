@@ -27,7 +27,8 @@ committed before any turn, so a turn colliding with one rolls back and
 frees its other keys; the cap counts those history rows too.
 
 Canonical arrival order is (conv_id, turn_idx) — the graft's stable
-ordering invariant (BASELINE.json input_hint).
+ordering invariant (BASELINE.json input_hint) — with a null ``conv_id``
+first, as Spark's ascending order puts it (``arrival_order``).
 """
 
 from __future__ import annotations
@@ -40,6 +41,11 @@ from sqlite_otel_spark.session import local_frame
 
 class ConflictOverflowError(RuntimeError):
     pass
+
+
+def arrival_order(conv_id: str | None, turn_idx: int) -> tuple:
+    """Sort key of the canonical arrival order, ``conv_id`` nulls first."""
+    return (conv_id is not None, conv_id or "", turn_idx)
 
 
 def resolve_span_conflicts(
@@ -145,7 +151,7 @@ def resolve_span_conflicts(
             (r.trace_id, r.span_id)
         )
     invalid: list[tuple] = []
-    for turn in sorted(by_turn):
+    for turn in sorted(by_turn, key=lambda t: arrival_order(*t)):
         keys = by_turn[turn]
         if any(k in committed for k in keys):
             invalid.append(turn)
@@ -161,11 +167,17 @@ def resolve_span_conflicts(
     return invalid_df, len(invalid)
 
 
+def join_verdicts(df: DataFrame, invalid_turns: DataFrame, how: str) -> DataFrame:
+    """``df`` semi- or anti-joined (``how``) to the broadcast verdict
+    turns; the nullable ``conv_id`` is compared null-safely."""
+    v = invalid_turns.toDF("_v_conv_id", "_v_turn_idx")
+    on = F.col("conv_id").eqNullSafe(v["_v_conv_id"]) & (F.col("turn_idx") == v["_v_turn_idx"])
+    return df.join(F.broadcast(v), on, how)
+
+
 def drop_conflicted(parsed: DataFrame, invalid_turns: DataFrame | None) -> DataFrame:
-    """Anti-join the (tiny, broadcast) invalid-turn set out of the parsed
-    stream — the distributed analogue of the rolled-back transactions."""
+    """Anti-join the invalid-turn set out of the parsed stream — the
+    distributed analogue of the rolled-back transactions."""
     if invalid_turns is None:
         return parsed
-    return parsed.join(
-        F.broadcast(invalid_turns), ["conv_id", "turn_idx"], "left_anti"
-    )
+    return join_verdicts(parsed, invalid_turns, "left_anti")

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sqlite_otel_spark.operators.conflicts import join_verdicts
+
 LINEAGE = ["conv_id", "turn_idx", "role", "tool", "ts"]
 
 SPAN_COLS = [
@@ -88,8 +90,7 @@ def conflict_rejects(records: DataFrame, invalid_turns: DataFrame) -> DataFrame:
     """Reject rows for turns invalidated by the cross-turn spans-PK
     cascade (the rolled-back transactions, database/traces.go:15)."""
     return (
-        build_routed(records)
-        .join(F.broadcast(invalid_turns), ["conv_id", "turn_idx"], "leftsemi")
+        join_verdicts(build_routed(records), invalid_turns, "leftsemi")
         .select(
             *LINEAGE, "signal_type",
             F.lit("spans PK violation").alias("reason"), "n_bytes",

@@ -404,8 +404,9 @@ class OracleDB:
         self.accepted.append({**meta, "signal_type": signal})
 
     def run(self, rows: list[dict]) -> "OracleDB":
-        """Process rows in canonical arrival order (conv_id, turn_idx)."""
-        for r in sorted(rows, key=lambda r: (r["conv_id"], r["turn_idx"])):
+        """Process rows in canonical arrival order (conv_id nulls first, turn_idx)."""
+        for r in sorted(rows, key=lambda r: (r["conv_id"] is not None,
+                                             r["conv_id"] or "", r["turn_idx"])):
             self.process_turn(r["conv_id"], r["turn_idx"], r.get("text"),
                               r.get("tool", ""), r.get("ts"))
         return self

@@ -55,7 +55,9 @@ Batch stage map:
     fact_sinks                       (filter+project; the D5 FKs were
                                       resolved at parse)
     role/tool broadcast enrichment   (D5 graft dims)
-    sinks + accounting               (S3, A1-A3)
+    sinks                            (S3)
+    collect_aggregates               (A1-A3: one fine aggregate over the
+                                      routed stream, folded on the driver)
 
 Shuffle inventory (what actually moves at 100 TB):
  - parse + id resolution + fact filter/project: narrow, ZERO
@@ -101,9 +103,6 @@ SALT_BUCKETS = 8
 class PipelineResult:
     sinks: dict[str, DataFrame]
     routed: DataFrame
-    accounting: DataFrame
-    by_signal_tool: DataFrame
-    by_time_bucket: DataFrame
     n_conflict_invalid: int = 0
     persisted: list = field(default_factory=list)
 
@@ -250,16 +249,11 @@ def run_pipeline(
     )
     valid, rejects = admit(records_all, invalid_turns)
 
-    routed = facts_ops.build_routed(valid)
-    roles, tools = role_dim(spark), tool_dim(spark)
-    routed_enriched = enrich(routed, roles, tools)
+    routed = enrich(facts_ops.build_routed(valid), role_dim(spark), tool_dim(spark))
 
     return PipelineResult(
         sinks={**build_dims(valid, valid, valid), **fact_sinks(valid, rejects)},
-        routed=routed_enriched,
-        accounting=agg.request_accounting(routed, rejects),
-        by_signal_tool=agg.counts_by_signal_tool(routed_enriched),
-        by_time_bucket=agg.counts_by_time_bucket(routed_enriched),
+        routed=routed,
         n_conflict_invalid=n_invalid,
         persisted=persisted,
     )
@@ -407,57 +401,9 @@ def write_sinks(result: PipelineResult, out_dir: str, cfg: PipelineConfig | None
 
 
 def collect_aggregates(result: PipelineResult) -> dict[str, list]:
-    """A1-A3 materialization in ONE job: aggregate the routed stream
-    ONCE at the finest granularity (bucket, signal, tool), union the
-    tiny rejects aggregate, and derive the two coarser granularities by
-    folding the collected fine rows on the driver. Round 6 (guide §2.3):
-    the previous GROUPING SETS form expanded every turn row 3x before
-    the partial aggregation — 9M rows through the hash agg at 3M turns
-    for the same three result sets; counts and int64 byte sums fold
-    associatively, so the coarser rows are bit-identical. The fine
-    result is thousands of rows — driver-side folding is free. The
-    individual accounting/by_signal_tool/by_time_bucket DataFrames
-    remain on PipelineResult as the correctness surface (their oracles
-    check values)."""
-    fine = (
-        result.routed
-        .groupBy(
-            F.window("ts", "1 hour")["start"].alias("bucket_start"),
-            "signal_type", "tool",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("n_bytes").alias("n_bytes"),
-            F.lit(0).alias("gid"),
-        )
+    """A1-A3 as driver lists: ``aggregates.fine_aggregate`` taken in ONE
+    collect (under AQE, several jobs) and folded by
+    ``aggregates.fold_aggregates``."""
+    return agg.fold_aggregates(
+        agg.fine_aggregate(result.routed, result.sinks["rejects"]).collect()
     )
-    rej = (
-        result.sinks["rejects"]
-        .groupBy("signal_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("n_bytes").alias("n_bytes"),
-            F.lit(999).alias("gid"),
-        )
-    )
-    rows = fine.unionByName(rej, allowMissingColumns=True).collect()
-    acc: dict = {}
-    by_tool: dict = {}
-    for r in rows:
-        if r.gid == 999:
-            acc.setdefault(r.signal_type, [r.signal_type, 0, 0, 0, 0])[3:5] = [r.n, r.n_bytes or 0]
-            continue
-        a = acc.setdefault(r.signal_type, [r.signal_type, 0, 0, 0, 0])
-        a[1] += r.n
-        a[2] += r.n_bytes or 0
-        key = (r.signal_type, r.tool)
-        by_tool[key] = by_tool.get(key, 0) + r.n
-    return {
-        "accounting": [tuple(v) for v in acc.values()],
-        "by_signal_tool": [(s, t, n) for (s, t), n in by_tool.items()],
-        "by_time_bucket": [
-            (r.bucket_start, r.signal_type, r.tool, r.n)
-            for r in rows
-            if r.gid == 0
-        ],
-    }

@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from sqlite_otel_spark.operators.conflicts import arrival_order
+
 OUT_SCHEMA = (
     "conv_id string, turn_idx int, trace_id string, span_id string"
 )
@@ -42,7 +44,7 @@ STATE_SCHEMA = "emitted boolean"
 
 def _dedup_fn(key, pdfs, state: GroupState):
     """Emit exactly one row per span PK, ever: the canonical first
-    arrival (min (conv_id, turn_idx)) of the first micro-batch that
+    arrival (min ``arrival_order``) of the first micro-batch that
     carries the PK. Later batches find ``state.exists`` and emit
     nothing. Within a batch the min-lineage row is chosen because
     arrival order inside a shuffled group is not deterministic."""
@@ -52,7 +54,7 @@ def _dedup_fn(key, pdfs, state: GroupState):
     best = None
     for pdf in pdfs:
         for conv, ti in zip(pdf["conv_id"], pdf["turn_idx"]):
-            if best is None or (conv, ti) < best:
+            if best is None or arrival_order(conv, ti) < arrival_order(*best):
                 best = (conv, int(ti))
     state.update((True,))
     if best is not None:

@@ -4,7 +4,9 @@ per-sink count equality, per-record natural-key equality, routed-row
 text equality under stable (conv_id, turn_idx) ordering (SURVEY §5.2,
 BASELINE.md items 1-2)."""
 
+import datetime as dt
 import json
+from collections import Counter
 
 import pytest
 
@@ -12,7 +14,8 @@ from sqlite_otel_spark.config import PipelineConfig
 from sqlite_otel_spark.fixtures import make_transcripts
 from sqlite_otel_spark.operators import aggregates
 from sqlite_otel_spark.oracle import OracleDB
-from sqlite_otel_spark.plans.pipeline import run_pipeline
+from sqlite_otel_spark.plans import checkpoint as cp
+from sqlite_otel_spark.plans.pipeline import collect_aggregates, run_pipeline
 from tests.conftest import transcripts_df
 
 MAX_BYTES = 5000
@@ -211,29 +214,41 @@ def test_cascade_resolution(pipeline_and_oracle):
     assert names == {"X", "Y-late"}
 
 
-def test_collect_aggregates_matches_individual_aggregates(spark):
-    """collect_aggregates' one-job finest-grain aggregate, folded on the
-    driver into the three granularities, must reproduce the three
-    individually-computed aggregate frames exactly."""
-    from sqlite_otel_spark.plans.pipeline import collect_aggregates
+def test_aggregates_match_oracle(pipeline_and_oracle):
+    """collect_aggregates' three result sets, counted from the
+    sequential oracle's accepted and rejected turns the way
+    scripts/regen_goldens.py counts them (rejected_bytes and the
+    null-signal_type reject row included)."""
+    result, oracle = pipeline_and_oracle
+    got = collect_aggregates(result)
 
-    rows = _rows()
-    result = run_pipeline(spark, transcripts_df(spark, rows),
-                          PipelineConfig(max_text_bytes=MAX_BYTES))
-    try:
-        fused = collect_aggregates(result)
-        acc = {tuple(r) for r in result.accounting
-               .filter("signal_type is not null")
-               .select("signal_type", "accepted", "accepted_bytes",
-                       "rejected", "rejected_bytes").collect()}
-        got_acc = {t for t in fused["accounting"] if t[0] is not None}
-        assert got_acc == acc
-        bst = {tuple(r) for r in result.by_signal_tool.collect()}
-        assert set(fused["by_signal_tool"]) == bst
-        btb = {tuple(r) for r in result.by_time_bucket.collect()}
-        assert set(fused["by_time_bucket"]) == btb
-    finally:
-        result.unpersist()
+    acc, accb, rej, rejb = Counter(), Counter(), Counter(), Counter()
+    by_tool, by_bucket = Counter(), Counter()
+    for a in oracle.accepted:
+        s, t = a["signal_type"], a["tool"]
+        acc[s] += 1
+        accb[s] += a["n_bytes"]
+        by_tool[(s, t)] += 1
+        by_bucket[(a["ts"].replace(minute=0, second=0, microsecond=0), s, t)] += 1
+    for r in oracle.rejects:
+        rej[r["signal_type"]] += 1
+        rejb[r["signal_type"]] += r["n_bytes"]
+    assert rej[None] > 0 and rejb[None] > 0
+    want_acc = {
+        (s, acc[s], accb[s], rej[s], rejb[s]) for s in {*acc, *rej}
+    }
+
+    assert sorted(got["accounting"], key=repr) == sorted(want_acc, key=repr)
+    assert sorted(got["by_signal_tool"]) == sorted(
+        (s, t, n) for (s, t), n in by_tool.items()
+    )
+    assert sorted(got["by_time_bucket"]) == sorted(
+        (b, s, t, n) for (b, s, t), n in by_bucket.items()
+    )
+
+
+def _sorted_aggregates(result):
+    return {k: sorted(v, key=repr) for k, v in collect_aggregates(result).items()}
 
 
 def test_emit_text_off_preserves_counts(spark):
@@ -250,9 +265,8 @@ def test_emit_text_off_preserves_counts(spark):
         assert {n: d.count() for n, d in r_on.sinks.items()} == {
             n: d.count() for n, d in r_off.sinks.items()
         }
-        acc_on = {tuple(r) for r in r_on.accounting.collect()}
-        acc_off = {tuple(r) for r in r_off.accounting.collect()}
-        assert acc_on == acc_off  # includes accepted_bytes (n_bytes path)
+        # includes accepted_bytes (the n_bytes path)
+        assert _sorted_aggregates(r_on) == _sorted_aggregates(r_off)
         assert r_off.routed.filter("text is not null").count() == 0
     finally:
         r_on.unpersist()
@@ -280,3 +294,50 @@ def test_staging_mode_matches_persist_mode(spark, tmp_path):
     finally:
         r_mem.unpersist()
         r_stg.unpersist()
+
+
+def _span_turn(conv_id, turn_idx, name):
+    """A trace turn carrying the one span (tX, sX)."""
+    text = json.dumps({"resourceSpans": [{
+        "resource": {"attributes": {"a": 1}},
+        "scopeSpans": [{"spans": [{"traceId": "tX", "spanId": "sX", "name": name}]}],
+    }]})
+    return {"conv_id": conv_id, "turn_idx": turn_idx, "role": "user",
+            "text": text, "tool": "bash", "ts": dt.datetime(2024, 1, 1)}
+
+
+# conv_id is nullable: a turn without one takes part in the span-PK
+# cascade, ordered before every named conv_id (Spark's ascending order)
+NULL_CONV_ID_CASES = {
+    "two_null_turns": [_span_turn(None, 0, "first"), _span_turn(None, 1, "second")],
+    "null_and_named": [_span_turn("c1", 0, "named"), _span_turn(None, 0, "null")],
+}
+
+
+@pytest.mark.parametrize("case", sorted(NULL_CONV_ID_CASES))
+@pytest.mark.parametrize("path", ["batch", "checkpoint"])
+def test_null_conv_id_span_clash(spark, tmp_path, path, case):
+    rows = NULL_CONV_ID_CASES[case]
+    oracle = OracleDB().run(rows)
+    assert oracle.sink_counts()["spans"] == 1
+    assert len(oracle.rejects) == 1
+
+    df = transcripts_df(spark, rows)
+    if path == "batch":
+        result = run_pipeline(spark, df)
+        sinks = result.sinks
+    else:
+        out = str(tmp_path / "ckpt")
+        cp.run_checkpointed(spark, df, out, PipelineConfig(checkpoint_buckets=2))
+        sinks = cp.read_sinks(spark, out)
+    try:
+        assert {n: d.count() for n, d in sinks.items()} == oracle.sink_counts()
+        assert {r.name for r in sinks["spans"].collect()} == {
+            v["name"] for v in oracle.spans.values()
+        }
+        assert {(r.conv_id, r.turn_idx) for r in sinks["rejects"].collect()} == {
+            (r["conv_id"], r["turn_idx"]) for r in oracle.rejects
+        }
+    finally:
+        if path == "batch":
+            result.unpersist()

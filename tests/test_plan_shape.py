@@ -52,9 +52,9 @@ def test_write_path_has_no_python_scan(spark, source):
         outputs = {
             **result.sinks,
             "routed": result.routed,
-            "accounting": result.accounting,
-            "by_signal_tool": result.by_signal_tool,
-            "by_time_bucket": result.by_time_bucket,
+            "fine_aggregate": aggregates.fine_aggregate(
+                result.routed, result.sinks["rejects"]
+            ),
         }
         assert len(result.sinks) == 7
         for name, df in outputs.items():
@@ -131,3 +131,29 @@ def test_warm_run_reuses_generated_code(spark, source, tmp_path):
     before = compiles.getCount()
     one_run(2)
     assert compiles.getCount() - before <= WARM_COMPILE_BOUND
+
+
+# Spark jobs one warm collect_aggregates call runs: ONE collect of the
+# fine aggregate, which AQE runs as several jobs. Measured on this
+# fixture (local[4], record cache materialized); a change in the count
+# is a change in the aggregate's plan.
+COLLECT_AGGREGATES_JOBS = 6
+
+
+def test_collect_aggregates_job_count(spark, source):
+    sc = spark.sparkContext
+    result = run_pipeline(spark, source, PipelineConfig())
+    try:
+        aggregates.sink_counts(result.sinks)
+        collect_aggregates(result)
+        sc.setJobGroup("collect_aggregates", "job-count pin")
+        try:
+            collect_aggregates(result)
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        jobs = sc.statusTracker().getJobIdsForGroup("collect_aggregates")
+        assert len(jobs) == COLLECT_AGGREGATES_JOBS
+    finally:
+        result.unpersist()
